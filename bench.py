@@ -214,14 +214,14 @@ def _compact_payload(payload: dict, timings: dict[str, float]) -> dict:
         (q for q in timings if q not in set(roster)),
         key=lambda q: -timings[q],
     )
-    # the printed line drops the full_results pointer and the benched
-    # count (both stay in the BENCH_FULL.json payload) — ~60 chars of
-    # headroom so value-width drift can't push the roster tail over
-    # the budget
+    # the printed line drops the full_results pointer, the benched
+    # count and the core count (all stay in the BENCH_FULL.json
+    # payload) — ~60 chars of headroom so value-width drift can't push
+    # the roster tail over the budget
     payload = {
         k: v
         for k, v in payload.items()
-        if k not in ("full_results", "n_queries_benched")
+        if k not in ("full_results", "n_queries_benched", "cpus")
     }
     keep: dict[str, float] = {}
     for q in roster + extras:
@@ -305,6 +305,8 @@ def main() -> None:
         "r1_headline_subtotal_sec": r1_subtotal,
         "n_queries_benched": len(timings),
         "full_results": "BENCH_FULL.json",
+        # the effective SPARK_GRAFT_CPUS: local[N] of the running session
+        "cpus": spark.sparkContext.defaultParallelism,
     }
     full_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL.json"

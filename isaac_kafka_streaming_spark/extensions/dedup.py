@@ -2621,8 +2621,7 @@ def register() -> dict:
             """,
             "X2 SRP sub-blocked embedding near-dup (oracle-checked scale tier)",
         ),
-        # --- registered in round 7 (previously staged; see
-        # queries.staged_queries for the staging mechanism) ---
+        # --- registered in round 7 (previously staged) ---
         "contained_documents": QueryDef(
             contained_documents,
             CONTAINED_DOCUMENTS_ORACLE_SQL,

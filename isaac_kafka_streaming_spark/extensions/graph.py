@@ -914,8 +914,10 @@ def label_propagation_from_graph(
     # at all — the round-15 groupBy + broadcast-join shape paid an
     # aggregate exchange + a broadcast build + a join, and carried the
     # 512M-row broadcast-cap risk this round's gate exists for.  A
-    # giant community lands as one linear, spill-safe window partition
-    # (no orderBy -> no sort) — the _large_star skew argument.
+    # giant community lands as one window partition; WindowExec still
+    # sorts on the partition key (the same window shape shows Sort
+    # under Window in plans/r16/page_components_after.txt), an
+    # external, spill-safe sort — the _large_star skew argument.
     w_sz = Window.partitionBy("community")
     return lbl.select(
         "page_id",
@@ -1039,9 +1041,10 @@ def components_from_graph(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     # the 512M-row broadcast-cap risk).  labeled no longer needs its
     # own checkpoint: it is consumed exactly once, by this window, and
     # its inputs (nodes, the star fixed point) are already
-    # checkpointed.  A giant component lands as one linear, spill-safe
-    # window partition (no orderBy -> no sort) — the _large_star skew
-    # argument.
+    # checkpointed.  A giant component lands as one window partition;
+    # WindowExec still sorts on the partition key (Sort (15) under
+    # Window (16) in plans/r16/page_components_after.txt), an external,
+    # spill-safe sort — the _large_star skew argument.
     w_sz = Window.partitionBy("component")
     return labeled.withColumn(
         "component_size", F.count("*").over(w_sz)

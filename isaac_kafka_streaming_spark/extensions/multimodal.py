@@ -2079,10 +2079,8 @@ def zstd_shard_ingest(spark, sf_dir: str) -> DataFrame:
     instead of gzip members, so the driver hash would grade the zstd
     round-trip end-to-end.  Output and oracle are byte-for-byte
     jsonl_shard_ingest's — the coding is the ONLY delta, which is the
-    point (the warc_curation_pipeline precedent).  STAGED round 15:
-    the live registry sits at the 150-slot K=3 ceiling, so
-    registration needs the round-16 verdict to arbitrate the
-    retire-first (COVERAGE.md 'Round-16 registration option')."""
+    point (the warc_curation_pipeline precedent).  Implemented but
+    not registered (COVERAGE.md 'Round-16 registration option')."""
     from ..io import read_table
 
     docs = read_table(spark, sf_dir, "documents")

@@ -1005,9 +1005,7 @@ def _pq_assign(sub: DataFrame, codebook: DataFrame) -> DataFrame:
     )
 
 
-def _pq_train(
-    sub: DataFrame, ksub: int, iters: int, dsub: int = _EMB_DIM // 8
-) -> DataFrame:
+def _pq_train(sub: DataFrame, ksub: int, iters: int, dsub: int) -> DataFrame:
     """Fixed-iteration Lloyd over every subspace at once, grouped by
     sub_id (init: first ksub vectors' subvectors), localCheckpoint
     per round exactly like kmeans_centroids.  Returns the final

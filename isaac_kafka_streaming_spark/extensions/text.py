@@ -2875,8 +2875,7 @@ def register() -> dict:
             "X2/X4 full curation gate: quality AND repetition AND lang "
             "AND dedup-canonical",
         ),
-        # --- registered in round 7 (previously staged; see
-        # queries.staged_queries for the staging mechanism) ---
+        # --- registered in round 7 (previously staged) ---
         "bigram_perplexity": QueryDef(
             bigram_perplexity,
             BIGRAM_PERPLEXITY_ORACLE_SQL,

@@ -51,25 +51,6 @@ def after(col: Column | str, delim: str) -> Column:
     return F.when(pos > 0, c.substr(pos + len(delim), F.length(c))).otherwise(c)
 
 
-def composite_key(*cols: Column | str, sep: str = "-") -> Column:
-    """F5 — the reference's '{userId}-{questionPageId}' composite re-key
-    (DerivedStreams.java:147).  In relational form keys are just column
-    sets; this exists for byte-compat output shaping."""
-    return F.concat_ws(sep, *[F.lower(F.col(c)) if isinstance(c, str) else F.lower(c) for c in cols])
-
-
-def ms_to_ts(col: Column | str) -> Column:
-    """F7 — epoch-millis payload time -> timestamp
-    (LoggedEventsListener.java:151)."""
-    return F.timestamp_millis(F.col(col) if isinstance(col, str) else col)
-
-
-def day_bucket(col: Column | str) -> Column:
-    """F8 — truncate to event-time day midnight (TIMESTAMP-typed, under
-    the pinned UTC session timezone)."""
-    return F.date_trunc("day", F.col(col) if isinstance(col, str) else col)
-
-
 def null_to_empty(col: Column | str) -> Column:
     """F10 — NullHandler: null -> '' (KafkaLoader.java:132-135)."""
     return F.coalesce((F.col(col) if isinstance(col, str) else col).cast("string"), F.lit(""))

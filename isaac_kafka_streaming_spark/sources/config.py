@@ -1,19 +1,13 @@
 """S4 — engine configuration mirroring the reference's
 config/config.properties keys (src/main/resources/config/config.properties:1-18).
 
-Plain dict + env overrides; the achievement thresholds become the
-literal threshold tuple used by operators.thresholds (a broadcastable
-dimension at scale).
+A frozen dataclass of the reference's defaults.  No code path reads it:
+operators.thresholds keeps its own ACHIEVEMENT_THRESHOLDS tuple.
 """
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass, field
-
-
-def _thresholds_from(s: str) -> tuple[int, ...]:
-    return tuple(int(x) for x in s.split(",") if x.strip())
 
 
 @dataclass(frozen=True)
@@ -38,18 +32,3 @@ class EngineConfig:
     # streaming cadence (LoggedEventsListener.java:72)
     trigger_interval: str = "10 seconds"
 
-
-def from_env(prefix: str = "ISAAC_") -> EngineConfig:
-    env = os.environ
-    kwargs: dict = {}
-    if f"{prefix}BOOTSTRAP_SERVERS" in env:
-        kwargs["bootstrap_servers"] = env[f"{prefix}BOOTSTRAP_SERVERS"]
-    if f"{prefix}THRESHOLDS" in env:
-        kwargs["achievement_thresholds"] = _thresholds_from(
-            env[f"{prefix}THRESHOLDS"]
-        )
-    if f"{prefix}JDBC_URL" in env:
-        kwargs["jdbc_url"] = env[f"{prefix}JDBC_URL"]
-    if f"{prefix}TRIGGER_INTERVAL" in env:
-        kwargs["trigger_interval"] = env[f"{prefix}TRIGGER_INTERVAL"]
-    return EngineConfig(**kwargs)

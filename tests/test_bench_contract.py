@@ -37,6 +37,7 @@ def _payload(bench, timings):
         "r1_headline_subtotal_sec": 6.7,
         "n_queries_benched": len(timings),
         "full_results": "BENCH_FULL.json",
+        "cpus": 8,
     }
 
 
@@ -56,10 +57,11 @@ def test_compact_line_fits_driver_tail_at_any_scale():
     parsed = json.loads(line)
     assert parsed["metric"] == "headline_queries_total_wall_sec"
     assert parsed["r1_headline_subtotal_sec"] == 6.7
-    # the benched count + full_results pointer live in BENCH_FULL.json
-    # only (round 16 freed them from the printed line for roster room)
+    # the benched count, full_results pointer and core count live in
+    # BENCH_FULL.json only (freed from the printed line for roster room)
     assert "n_queries_benched" not in parsed
     assert "full_results" not in parsed
+    assert "cpus" not in parsed
 
 
 def test_compact_line_keeps_r1_baseline_subset_first():

@@ -125,12 +125,18 @@ def test_personalized_pagerank_seed_bias_laws(spark, sf_smoke):
     from isaac_kafka_streaming_spark.extensions.graph import (
         PAGERANK_DAMPING,
         PPR_N_SEEDS,
+        _page_graph,
         _purchase_seeds,
         pagerank_pages,
         pagerank_personalized,
     )
 
-    seeds = {r.page_id for r in _purchase_seeds(spark, sf_smoke).collect()}
+    seed_rows = [r.page_id for r in _purchase_seeds(spark, sf_smoke).collect()]
+    # the fused seed top-k PPR actually runs on is the standalone one,
+    # row for row and in order
+    _, _, fused = _page_graph(spark, sf_smoke, with_purchase_counts=True)
+    assert [r.page_id for r in fused.collect()] == seed_rows
+    seeds = set(seed_rows)
     assert len(seeds) == PPR_N_SEEDS
     ppr = {r.page_id: r.ppr for r in pagerank_personalized(spark, sf_smoke).collect()}
     uni = {r.page_id: r.pagerank for r in pagerank_pages(spark, sf_smoke).collect()}

@@ -1444,13 +1444,11 @@ def test_shard_id_ignores_extension_digits(spark, tmp_path):
 
 
 def test_zstd_shard_ingest_matches_registered_twin(spark, sf_smoke):
-    """The ready-to-stage zstd_shard_ingest entry must produce the
+    """The unregistered zstd_shard_ingest entry must produce the
     registered jsonl_shard_ingest's rows EXACTLY (same output schema,
     same values — the shard coding is the only delta, so the oracle
-    is shared verbatim).  Direct parity here until the round-16
-    verdict arbitrates the retire-first that would let it stage (the
-    rotation-feasibility guard rejects a 51st must-register entry at
-    the 150 ceiling)."""
+    is shared verbatim).  Direct parity here while the entry is not
+    registered."""
     from isaac_kafka_streaming_spark.queries import all_queries
 
     want = sorted(

@@ -1,7 +1,6 @@
-"""Parity + invariants for the round-7-staged HLL distinct witness.
-
-Staged, not registered: the round-6 driver window is saturated (see
-the staging note above _DRIVER_CHECK_ORDER in queries.py).
+"""Parity + invariants for the sketch and feature-grid entries
+registered in round 7: the HLL distinct witness, histogram quantiles,
+gap-fill, funnel and cohort retention.
 """
 
 from __future__ import annotations
@@ -51,7 +50,7 @@ def test_hll_estimate_quality(spark, sf_smoke):
 
 
 def test_histogram_quantiles_matches_oracle_and_error(spark, sf_smoke):
-    """Round-7-staged bounded-state quantile tier: hash-exact vs the
+    """Bounded-state quantile tier: hash-exact vs the
     DuckDB replay, and the 64-bin estimate lands within one bin width
     of the exact percentile (the histogram's worst-case error bound)."""
     from isaac_kafka_streaming_spark.queries import (

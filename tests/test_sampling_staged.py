@@ -1,8 +1,6 @@
-"""Parity + invariants for the round-7-staged priority_sample
-(Duffield–Lund–Thorup weighted sampling without replacement).
-
-Staged, not registered: the round-6 driver window is saturated (see
-the staging note above _DRIVER_CHECK_ORDER in queries.py).
+"""Parity + invariants for priority_sample (Duffield–Lund–Thorup
+weighted sampling without replacement), and invariants of the DSIR,
+DoReMi, mixture and split-decontamination selection paths.
 """
 
 from __future__ import annotations

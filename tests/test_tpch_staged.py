@@ -1,13 +1,10 @@
-"""Parity for the round-7-staged TPC-H shapes (q2 / q8 / q9 / q11 /
-q12 / q19 / q20 / q21 — with these, every one of the 22 TPC-H query
-shapes has a live or staged equivalent, adapted where the driver
+"""Parity for the TPC-H shapes registered in round 7 (q2 / q8 / q9 /
+q11 / q12 / q19 / q20 / q21 — with these, every one of the 22 TPC-H
+query shapes has a registered equivalent, adapted where the driver
 schema lacks partsupp / commit-receipt dates).
 
-These QueryDefs are implemented and oracle-twinned now but NOT yet
-registered — the round-6 driver window is saturated (see the staging
-note above _DRIVER_CHECK_ORDER in queries.py).  This file runs the
-same check the driver will: Spark result vs DuckDB oracle on the same
-parquet, exact values, exact dtypes.
+This file runs the same check the driver does: Spark result vs DuckDB
+oracle on the same parquet, exact values, exact dtypes.
 """
 
 from __future__ import annotations

@@ -180,8 +180,7 @@ PICKS = {
         "localCheckpoint keeps lineage flat (plan shown is the final "
         "projection)."
     ),
-    # round 6 staged additions (registered round 7; resolved via
-    # staged_queries())
+    # round 6 staged additions (registered round 7)
     "tpch_q8": (
         "Market-share conditional aggregate: the share and the "
         "denominator ride ONE partial sum; every dim except orders "
@@ -402,17 +401,13 @@ PICKS = {
 def main() -> None:
     spark = get_spark("plans")
     spark.sparkContext.setLogLevel("ERROR")
-    from isaac_kafka_streaming_spark.queries import (
-        retired_tiers,
-        staged_queries,
-    )
+    from isaac_kafka_streaming_spark.queries import retired_tiers
 
     class _Fn:
         def __init__(self, fn):
             self.fn = fn
 
     reg = dict(all_queries())
-    reg.update(staged_queries())
     # round-8-retired production tiers keep their plan docs
     reg.update({n: _Fn(f) for n, f in retired_tiers().items()})
     fmt = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(

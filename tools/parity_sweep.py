@@ -61,13 +61,10 @@ def _norm(v) -> str:
     return str(v)
 
 
-def sweep(entries: dict, sf_dir: str, label: str = "") -> int:
-    """Driver-style compare loop shared by this sweep (live registry)
-    and tools/stage_check.py (staged registry): bare session, DuckDB
-    views, per-entry rowcount/schema/value-hash.  ``entries`` maps
-    name -> (fn, sql_or_None).  Returns the process exit code — a
-    single compare implementation so the two gates can never diverge.
-    """
+def sweep(entries: dict, sf_dir: str) -> int:
+    """Driver-style compare loop: bare session, DuckDB views, per-entry
+    rowcount/schema/value-hash.  ``entries`` maps name ->
+    (fn, sql_or_None).  Returns the process exit code."""
     import duckdb
     from pyspark.sql import SparkSession
 
@@ -127,7 +124,7 @@ def sweep(entries: dict, sf_dir: str, label: str = "") -> int:
             )
 
     print(
-        f"\n{len(entries) - len(failed)}/{len(entries)}{label} pass"
+        f"\n{len(entries) - len(failed)}/{len(entries)} pass"
         + (f"; FAILED: {', '.join(failed)}" if failed else "")
     )
     spark.stop()

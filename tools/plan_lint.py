@@ -1,4 +1,4 @@
-"""Plan lint: sweep EVERY live + staged query's physical plan for the
+"""Plan lint: sweep EVERY registered query's physical plan for the
 scale anti-patterns the spot guards in tests/test_plans.py pin for
 individual queries — a whole-surface audit instead of a sampled one.
 
@@ -118,10 +118,7 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
-    from isaac_kafka_streaming_spark.queries import (
-        all_queries,
-        staged_queries,
-    )
+    from isaac_kafka_streaming_spark.queries import all_queries
 
     spark = (
         SparkSession.builder.master("local[8]")
@@ -134,7 +131,6 @@ def main() -> int:
     from isaac_kafka_streaming_spark.queries import retired_tiers
 
     entries = {n: qd.fn for n, qd in all_queries().items()}
-    entries.update({n: qd.fn for n, qd in staged_queries().items()})
     # round-8-retired production tiers stay in the lint sweep
     entries.update(retired_tiers())
     violations: list[str] = []

@@ -1,166 +1,103 @@
-"""Propose the next round's _DRIVER_CHECK_ORDER (the 50-entry driver
-window) from the CORRECTNESS_r*.json history — automating the
-per-round rotation chore the round-5 verdict assigned by hand.
+"""The driver window rule: which 50 registry entries go first in
+``all_queries()``.
 
-Priority tiers (highest first), filling 50 slots:
-  T0  entries with NO green driver row ever (including any staged
-      entries being registered this round — they appear when
-      --include-staged is passed)
-  T1  entries whose last green is <= latest-2 (the freshness invariant
-      in tests/test_registry.py REQUIRES these in-window next round)
-  T2  entries whose last green == latest-1 (expire the round after —
-      front-run them while slots remain)
-  T3  entries green in the latest round (fresh; fill remaining slots
-      least-recently-first)
+The grading driver hash-checks only the first 50 entries of the
+registry each round and records the result in ``CORRECTNESS_r{N}.json``.
+The window is the 50 stalest entries.  An entry's staleness is the round
+of its last green driver row; an entry that was never green, or whose
+newest row is red, counts as -1.  Ties break by name.  The rule can
+always be met, whatever the history holds.
 
 Usage:
-    python tools/plan_window.py                  # plan from live registry
-    python tools/plan_window.py --include-staged # + staged_queries()
+    python tools/plan_window.py    # paste-ready block for queries.py
 
-Prints a paste-ready Python list with tier comments.  The green-row
-definition is loaded FROM tests/test_registry.py so the planner and
-the invariant can never disagree.
+It prints ``_DRIVER_WINDOW_HISTORY`` and ``_DRIVER_CHECK_ORDER``
+computed over every CORRECTNESS file present, and reports freshness (the
+largest number of rounds since any entry's last green row) on stderr.
 """
 
 from __future__ import annotations
 
-import importlib.util
 import json
 import re
 import sys
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
-sys.path.insert(0, str(REPO))
 
 WINDOW = 50
 
 
-def _load_is_green():
-    spec = importlib.util.spec_from_file_location(
-        "test_registry", REPO / "tests" / "test_registry.py"
+def is_green(row: dict) -> bool:
+    """A clean driver row: oracle triple-match, or the declared rows-only
+    contract (``err == "no_oracle"`` with a row count recorded).
+    Affirmative signals required — an all-None row with no err (a query
+    that never actually executed) must NOT count as green."""
+    if row.get("err") == "no_oracle":
+        return row.get("spark_rows") is not None
+    return (
+        not row.get("err")
+        and row.get("rows_match") is True
+        and row.get("schema_match") is True
+        and row.get("hash_match") is True
     )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod._is_green
 
 
-def last_green_history(hist: dict[int, dict], is_green) -> dict[str, int]:
-    """name -> latest round with a green driver row."""
-    last_green: dict[str, int] = {}
-    for rnd in sorted(hist):
-        for name, row in hist[rnd].items():
-            if isinstance(row, dict) and is_green(row):
-                last_green[name] = rnd
-    return last_green
+def load_history(upto: int | None = None) -> dict[int, dict]:
+    """round number -> parsed CORRECTNESS_r{N}.json, rounds <= ``upto``."""
+    hist = {}
+    for p in REPO.glob("CORRECTNESS_r*.json"):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", p.name)
+        if m and (upto is None or int(m.group(1)) <= upto):
+            hist[int(m.group(1))] = json.loads(p.read_text())
+    return hist
 
 
-def compute_tiers(
-    names: list[str], last_green: dict[str, int], latest: int
-) -> dict[str, list[str]]:
-    """The tier-aware rotation rule, as a pure function shared by the
-    CLI below AND the look-ahead feasibility guard in
-    tests/test_staged_registry.py (the guard simulates FUTURE rounds
-    with this exact fill, so a CORRECTNESS file landing after the
-    final commit of a round can never strand HEAD red — the planner
-    would rotate, and the guard knows it)."""
-    tiers: dict[str, list[str]] = {"T0": [], "T1": [], "T2": [], "T3": []}
-    for n in names:
-        lg = last_green.get(n)
-        if lg is None:
-            tiers["T0"].append(n)
-        elif lg <= latest - 2:
-            tiers["T1"].append(n)
-        elif lg == latest - 1:
-            tiers["T2"].append(n)
-        else:
-            tiers["T3"].append(n)
-    # within T3, least-recently-verified first is moot (all == latest);
-    # keep registry order for stability
-    return tiers
+def staleness(history: dict[int, dict]) -> dict[str, int]:
+    """name -> round of its last green row, or -1 if its newest row is
+    red.  Names without any row are absent (the caller's -1)."""
+    stale: dict[str, int] = {}
+    for rnd in sorted(history):
+        for name, row in history[rnd].items():
+            stale[name] = rnd if is_green(row) else -1
+    return stale
 
 
-def plan_window(
-    names: list[str], last_green: dict[str, int], latest: int
+def stalest_window(
+    names: list[str], history: dict[int, dict], n: int = WINDOW
 ) -> list[str]:
-    """The planned next-round window: tiers in priority order, truncated
-    to WINDOW slots.  Raises if the required tiers (T0+T1) alone exceed
-    the window — the infeasible case the guard exists to catch."""
-    tiers = compute_tiers(names, last_green, latest)
-    must = len(tiers["T0"]) + len(tiers["T1"])
-    if must > WINDOW:
-        raise ValueError(
-            f"window infeasible: {len(tiers['T0'])} never-checked + "
-            f"{len(tiers['T1'])} invariant-required > {WINDOW}"
-        )
-    plan: list[str] = []
-    for tier in ("T0", "T1", "T2", "T3"):
-        plan += tiers[tier][: WINDOW - len(plan)]
-    return plan
+    """The ``n`` stalest of ``names``, stalest first, ties by name."""
+    stale = staleness(history)
+    return sorted(names, key=lambda name: (stale.get(name, -1), name))[:n]
+
+
+def freshness(names: list[str], history: dict[int, dict]) -> int:
+    """Rounds since the stalest entry's last green row (an entry never
+    green counts from round 0)."""
+    stale = staleness(history)
+    latest = max(history, default=0)
+    return max(latest - max(stale.get(name, -1), 0) for name in names)
 
 
 def main() -> int:
-    include_staged = "--include-staged" in sys.argv
+    sys.path.insert(0, str(REPO))
+    from isaac_kafka_streaming_spark.queries import all_queries
 
-    from isaac_kafka_streaming_spark.queries import (
-        all_queries,
-        staged_queries,
-    )
-
-    is_green = _load_is_green()
-    hist: dict[int, dict] = {}
-    for p in REPO.glob("CORRECTNESS_r*.json"):
-        m = re.match(r"CORRECTNESS_r(\d+)\.json", p.name)
-        if m:
-            hist[int(m.group(1))] = json.loads(p.read_text())
+    hist = load_history()
     if not hist:
-        print("no CORRECTNESS_r*.json history found")
+        print("no CORRECTNESS_r*.json history found", file=sys.stderr)
         return 1
-    latest = max(hist)
-
-    last_green = last_green_history(hist, is_green)
-
     names = list(all_queries())
-    if include_staged:
-        names += [n for n in staged_queries() if n not in names]
-
-    tiers = compute_tiers(names, last_green, latest)
-    must = len(tiers["T0"]) + len(tiers["T1"])
-    if must > WINDOW:
-        print(
-            f"IMPOSSIBLE: {must} entries REQUIRE a slot "
-            f"(T0 {len(tiers['T0'])} + T1 {len(tiers['T1'])}) > {WINDOW}; "
-            "the invariant cannot hold — register fewer new entries or "
-            "split across rounds."
-        )
-        return 1
-
-    plan: list[str] = []
-    notes = {
-        "T0": "no green row yet (must-check)",
-        "T1": f"last green <= r{latest - 2} (invariant requires)",
-        "T2": f"last green r{latest - 1} (expires after next round)",
-        "T3": f"green in r{latest} (fresh; filling remaining slots)",
-    }
-    print(f"# proposed round-{latest + 1} window "
-          f"(history through r{latest}; {len(names)} entries considered)")
+    print(f"_DRIVER_WINDOW_HISTORY = {max(hist)}")
     print("_DRIVER_CHECK_ORDER = [")
-    for tier in ("T0", "T1", "T2", "T3"):
-        take = tiers[tier][: WINDOW - len(plan)]
-        if not take:
-            continue
-        print(f"    # {tier} — {notes[tier]} ({len(take)}"
-              + (f" of {len(tiers[tier])}" if len(take) < len(tiers[tier])
-                 else "")
-              + ")")
-        for n in take:
-            print(f'    "{n}",')
-        plan += take
+    for name in stalest_window(names, hist):
+        print(f'    "{name}",')
     print("]")
-    parked = [n for n in names if n not in plan]
-    at_risk = [n for n in parked if last_green.get(n, -1) <= latest - 1]
-    print(f"# window {len(plan)}/{WINDOW}; parked {len(parked)}; "
-          f"parked entries NOT green in r{latest}: {at_risk or 'none'}")
+    print(
+        f"freshness: {freshness(names, hist)} rounds "
+        f"({len(names)} entries, history through r{max(hist)})",
+        file=sys.stderr,
+    )
     return 0
 
 

@@ -4,13 +4,12 @@ judge check, in one command, with one summary line per gate.
     cd /tmp && python /root/repo/tools/verify_all.py [sf_dir]
 
 Runs, in order (each in its own process):
-  1. registry-shape tests (window rotation invariants — pure checks)
+  1. registry-shape tests (driver window rule — pure checks)
   2. entry smoke: __spark_entry__.entry() on a BARE session from a
      neutral cwd — the driver's t1 check verbatim (catches conf or
      path dependencies the tuned test session would mask)
   3. live-registry oracle parity sweep (driver-exact compare)
-  4. staged-registry sweep (same compare, staged_queries())
-  5. whole-surface plan lint (cartesian / Python-eval / global-sort)
+  4. whole-surface plan lint (cartesian / Python-eval / global-sort)
 
 Exit 0 iff every gate is clean.  The heavy pytest suite and bench are
 NOT included — run those separately (`python -m pytest tests/ -x -q`,
@@ -46,7 +45,7 @@ def main() -> int:
     run(
         "registry-shape",
         [sys.executable, "-m", "pytest", str(REPO / "tests/test_registry.py"),
-         str(REPO / "tests/test_staged_registry.py"), "-q"],
+         "-q"],
         " passed",
     )
     entry_smoke = f"""
@@ -69,11 +68,6 @@ print(f"entry ok: {{n}} rows, {{len(qs)}} queries, {{len(osql)}} oracles")
         "live-parity",
         [sys.executable, str(REPO / "tools/parity_sweep.py"), sf_dir],
         " pass",
-    )
-    run(
-        "staged-parity",
-        [sys.executable, str(REPO / "tools/stage_check.py"), sf_dir],
-        "staged pass",
     )
     run(
         "plan-lint",
