@@ -6,7 +6,8 @@ Prints ONE JSON line:
 
 Each query is materialized with the noop sink (full execution, no
 driver-side collect cost).  Wall-clock per query, one shared
-SparkSession, AQE on (session.get_spark).
+SparkSession, AQE on (session.get_spark).  `time_entries` is the one
+timing loop; tools/bench_scaled.py runs the same loop at a larger SF.
 """
 
 from __future__ import annotations
@@ -26,9 +27,6 @@ from isaac_kafka_streaming_spark.session import get_spark  # noqa: E402
 # ranks, JSON access, dedup tiers, similarity search, text analysis.
 # Round 2 widened it with the text-analysis queries and dedup_simhash so
 # regressions in the newest code surface in the per-round numbers.
-# Caveat (SCALE_DESIGN.md): min-of-3 reports the WARM floor — queries
-# that .cache() internally (minhash) hit plan-equality cache reuse on
-# repeats; cold cost is measured separately with clearCache between runs.
 HEADLINE = [
     "tpch_q1",
     "revenue_by_nation",
@@ -236,45 +234,52 @@ def _r1_set() -> list[str]:
     return HEADLINE[:10] + ["knn_bruteforce", "token_counts", "text_quality"]
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    spark = get_spark("isaac-bench")
-    registry = all_queries()
-    fns = {name: qd.fn for name, qd in registry.items()}
-    # tiers retired from the graded registry in round 8 stay benched by
-    # direct call, so the perf series (and the round-1 subtotal vs
-    # BASELINE.md — _r1_set() includes the retired dedup_minhash_lsh;
-    # dedup_simhash is benched but sits outside that subtotal)
-    # remains comparable across rounds
+def board_fns() -> dict:
+    """Every benchable entry by name: the registry plus the tiers
+    retired from it, which stay benched by direct call so the perf
+    series (and the round-1 subtotal vs BASELINE.md — _r1_set()
+    includes the retired dedup_minhash_lsh) remains comparable."""
     from isaac_kafka_streaming_spark.queries import retired_tiers
 
+    fns = {name: qd.fn for name, qd in all_queries().items()}
     fns.update(retired_tiers())
+    return fns
 
+
+def time_entries(spark, fns: dict, names: list[str], sf_dir: str) -> dict[str, float]:
+    """Min wall seconds of each entry in `names`, materialized with the
+    noop sink (full execution, no driver-side collect cost).
+
+    Caveat (SCALE_DESIGN.md): the min reports the WARM floor — queries
+    that .cache() internally hit plan-equality cache reuse on repeats.
+    The cache is cleared between entries, not between samples.
+    """
+    sc = spark.sparkContext
     # settle: a preceding phase's JVM may still be tearing down and
     # stealing cores — measured 3-10x per-query spikes when timing
     # starts immediately (wall-only cost; not part of the metric)
     time.sleep(10)
     # JVM/codegen warmup on a trivial plan (not counted)
-    registry["event_type_counts"].fn(spark, sf_dir).write.format("noop").mode(
+    fns["event_type_counts"](spark, sf_dir).write.format("noop").mode(
         "overwrite"
     ).save()
 
     timings: dict[str, float] = {}
-    for name in HEADLINE:
-        # min-of-3 with a stability extension (round-11): ambient
-        # container load can still blow 2 of 3 samples on a short
-        # query, leaving a min that swings ±10-48% between otherwise
-        # identical runs.  Keep sampling (up to 5) until the two
-        # FASTEST samples agree within 5% (+20 ms floor for
-        # sub-100 ms queries) — then the reported min is reproducible
-        # run-over-run, and the metric stays the same min as every
-        # earlier round.
-        # label jobs so the UI/event log attributes stages to queries
-        # (guide §1.5; display-only, the timed work is unchanged)
-        spark.sparkContext.setJobDescription(f"bench: {name}")
+    for name in names:
+        # min-of-3 with a stability extension: ambient container load
+        # can still blow 2 of 3 samples on a short query, leaving a min
+        # that swings ±10-48% between otherwise identical runs.  Keep
+        # sampling (up to 5) until the two FASTEST samples agree within
+        # 5% (+20 ms floor for sub-100 ms queries) — then the reported
+        # min is reproducible run-over-run.
+        # The job description names the entry and the `bench.sample`
+        # local property the sample, so an event log of the run
+        # attributes jobs to entries (tools/profile_log.py); both are
+        # display-only, the timed work is unchanged.
+        sc.setJobDescription(f"bench: {name}")
         runs: list[float] = []
         for i in range(5):
+            sc.setLocalProperty("bench.sample", str(i))
             t0 = time.perf_counter()
             fns[name](spark, sf_dir).write.format("noop").mode(
                 "overwrite"
@@ -285,12 +290,21 @@ def main() -> None:
                 if lo2 - lo <= 0.05 * lo + 0.02:
                     break
         timings[name] = round(min(runs), 3)
-        spark.sparkContext.setJobDescription(None)
+        sc.setLocalProperty("bench.sample", None)
+        sc.setJobDescription(None)
         spark.catalog.clearCache()
         # between-query GC (uncounted): heap pressure from earlier
         # queries otherwise lands as a collection pause inside a later
         # query's measured window
         spark._jvm.System.gc()
+    return timings
+
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    spark = get_spark("isaac-bench")
+    timings = time_entries(spark, board_fns(), HEADLINE, sf_dir)
 
     total = round(sum(timings.values()), 3)
     # the round-1 headline set as a subtotal, so round-over-round totals

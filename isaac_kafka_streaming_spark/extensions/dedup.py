@@ -826,51 +826,6 @@ def _simhash_chunk_join(
 # -- dedup clustering: connected components over near-dup pairs ------------
 
 
-def connected_components(
-    edges: DataFrame, src: str = "doc_a", dst: str = "doc_b", max_iter: int = 64
-) -> DataFrame:
-    """Min-label propagation over an undirected edge set -> (node, component).
-
-    The post-pairing step of dedup: near-dup PAIRS become KEEP/DROP
-    decisions only after grouping into clusters (component id = min
-    doc_id reachable).  Converges in O(graph diameter) rounds; each
-    round is one join + one min-aggregate, localCheckpoint()ed so the
-    plan doesn't grow with iterations.  Correctness baseline; the scale
-    path is ``connected_components_star`` below (provably fewer rounds
-    and no per-round full-graph label join on skewed graphs), tested
-    equal on every graph shape in tests/test_operators.py.
-    Genuinely iterative -> no SQL oracle (rows-only check).
-    """
-    sym = edges.select(
-        F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b")
-    )
-    sym = sym.union(sym.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    labels = (
-        sym.select(F.col("a").alias("node"))
-        .distinct()
-        .withColumn("comp", F.col("node"))
-        .localCheckpoint()
-    )
-    for _ in range(max_iter):
-        neighbor_min = (
-            sym.join(labels, sym["b"] == labels["node"])
-            .select(F.col("a").alias("node"), "comp")
-            .union(labels)
-            .groupBy("node")
-            .agg(F.min("comp").alias("comp"))
-        ).localCheckpoint()
-        changed = (
-            neighbor_min.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.comp") != F.col("o.comp"))
-            .count()
-        )
-        labels = neighbor_min
-        if changed == 0:
-            break
-    return labels
-
-
 def _large_star(e: DataFrame) -> DataFrame:
     """Large-star round (Kiveris et al. 2014, alg. 2): every node links
     its LARGER neighbors to the minimum of its closed neighborhood.
@@ -948,10 +903,11 @@ def connected_components_star(
     """Large-star/small-star alternation (Kiveris et al., "Connected
     Components in MapReduce and Beyond", SoCC 2014) -> (node, component).
 
-    Same contract as ``connected_components`` — component id = min
-    reachable node — but the 100 TB shape: each round rewrites the EDGE
-    set toward star graphs instead of joining a full label table against
-    every edge, converging in O(log^2 n) rounds vs O(diameter), and the
+    Component id = min reachable node, over the non-self-loop edges (a
+    node whose only edge is a self-loop gets no row).  The 100 TB shape:
+    each round rewrites the EDGE set toward star graphs instead of
+    joining a full label table against every edge (min-label
+    propagation), converging in O(log^2 n) rounds vs O(diameter), and the
     per-key width after a large-star round is bounded by the
     neighborhood minimum's degree, which small-star immediately
     collapses — the skew a long chain or hub builds up is dismantled a

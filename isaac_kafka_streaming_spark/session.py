@@ -1,4 +1,4 @@
-"""SparkSession factory tuned for the local[32] test harness.
+"""SparkSession factory for a local[N] session.
 
 The settings mirror the scale-design notes in SURVEY.md §6: AQE on
 (runtime re-planning, skew-join handling, partition coalescing),
@@ -17,9 +17,50 @@ import os
 
 from pyspark.sql import SparkSession
 
+# cgroup v2, then v1: the memory limit of this process's container
+_MEM_LIMIT_FILES = (
+    "/sys/fs/cgroup/memory.max",
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+)
+_DRIVER_MEM_CAP_MB = 16 * 1024
+
+
+def default_cpus() -> str:
+    """`SPARK_GRAFT_CPUS`, else the cores this process may run on."""
+    return os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+
+
+def available_mem_mb(
+    limit_files=_MEM_LIMIT_FILES, meminfo: str = "/proc/meminfo"
+) -> int:
+    """MemTotal, lowered to the cgroup memory limit when one is set
+    ("max" or an unreadable file means no limit)."""
+    with open(meminfo) as f:
+        kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    mb = kb // 1024
+    for path in limit_files:
+        try:
+            with open(path) as f:
+                raw = f.read().strip()
+        except OSError:
+            continue
+        if raw.isdigit():
+            mb = min(mb, int(raw) // (1024 * 1024))
+    return mb
+
+
+def default_driver_mem() -> str:
+    """`SPARK_GRAFT_DRIVER_MEM`, else half the memory available to this
+    process, capped at 16g: the other half is left to the Python workers
+    and the JVM's off-heap memory."""
+    explicit = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if explicit:
+        return explicit
+    return f"{min(_DRIVER_MEM_CAP_MB, available_mem_mb() // 2)}m"
+
 
 def get_spark(app_name: str = "isaac-kafka-streaming-spark") -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = default_cpus()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -28,7 +69,7 @@ def get_spark(app_name: str = "isaac-kafka-streaming-spark") -> SparkSession:
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # local[32]: shuffle width ~ cores; on a cluster this scales with
+        # local[N]: shuffle width ~ cores; on a cluster this scales with
         # executor count (or is left to AQE's initialPartitionNum).
         .config("spark.sql.shuffle.partitions", cpus)
         # shuffle/broadcast/spill payload codec.  zstd was tried in the
@@ -57,7 +98,7 @@ def get_spark(app_name: str = "isaac-kafka-streaming-spark") -> SparkSession:
         # matching DuckDB's read of the same file).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", default_driver_mem())
         # Python workers must import this package when deserializing
         # applyInPandas/pandas_udf closures.  The driver finds it via
         # sys.path (conftest/caller cwd), but worker processes only see

@@ -10,7 +10,8 @@ The test container has no Kafka broker (and may lack the
 spark-sql-kafka artifact), so these builders construct the plan but
 callers must be prepared for a runtime error if the kafka data source
 is unavailable — the file-based twin in streaming.topology covers
-tests.  Topic names mirror config.properties via sources.config.
+tests.  The topic names below are the reference's config.properties
+defaults.
 """
 
 from __future__ import annotations

@@ -283,32 +283,49 @@ def test_daily_counts_map_presentation(spark):
     }
 
 
+def _union_find_components(edges) -> dict:
+    """node -> min reachable node over the non-self-loop edges: the
+    plain-Python reference for the star alternation."""
+    parent: dict = {}
+
+    def find(x):
+        while parent[x] != x:
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        if a != b:
+            ra, rb = find(parent.setdefault(a, a)), find(parent.setdefault(b, b))
+            parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in parent}
+
+
 def test_connected_components_chain_and_isolate(spark):
     """CC over a chain finds one cluster with min-label id; disjoint
-    pairs stay separate; convergence needs diameter rounds."""
+    pairs stay separate."""
     from isaac_kafka_streaming_spark.extensions.dedup import (
-        connected_components,
+        connected_components_star,
     )
 
     edges = spark.createDataFrame(
         [(2, 3), (3, 4), (4, 5), (9, 10)], "doc_a long, doc_b long"
     )
     comp = {
-        r.node: r.comp for r in connected_components(edges).collect()
+        r.node: r.comp for r in connected_components_star(edges).collect()
     }
     assert comp == {2: 2, 3: 2, 4: 2, 5: 2, 9: 9, 10: 9}
 
 
 def test_connected_components_star_matches_propagation(spark):
     """The large-star/small-star scale path must produce the same
-    (node, component) labeling as plain min-label propagation on every
-    graph shape: long chain (worst diameter), hub star (worst skew),
-    dense clique, disjoint pairs, duplicate/reversed edges, and a
-    pseudo-random near-dup-like graph."""
+    (node, component) labeling as a union-find over the non-self-loop
+    edges on every graph shape: long chain (worst diameter), hub star
+    (worst skew), dense clique, disjoint pairs, duplicate/reversed
+    edges with a self-loop-only node, and a pseudo-random near-dup-like
+    graph."""
     import random
 
     from isaac_kafka_streaming_spark.extensions.dedup import (
-        connected_components,
         connected_components_star,
     )
 
@@ -317,9 +334,7 @@ def test_connected_components_star_matches_propagation(spark):
         (rng.randrange(0, 60), rng.randrange(0, 60)) for _ in range(80)
     ]
     graphs = [
-        # chain: diameter 29 — needs >= 29 propagation rounds, while the
-        # star alternation converges in a handful (the point of having it)
-        [(i, i + 1) for i in range(1, 30)],
+        [(i, i + 1) for i in range(1, 30)],              # chain: diameter 29
         [(100, v) for v in range(101, 140)],             # hub star
         [(a, b) for a in range(1, 9) for b in range(a + 1, 9)],  # clique
         [(2, 3), (3, 4), (9, 10), (20, 21)],             # disjoint
@@ -328,18 +343,11 @@ def test_connected_components_star_matches_propagation(spark):
     ]
     for g in graphs:
         edges = spark.createDataFrame(g, "doc_a long, doc_b long")
-        base = {
-            r.node: r.comp for r in connected_components(edges).collect()
-        }
         star = {
             r.node: r.comp
             for r in connected_components_star(edges).collect()
         }
-        # propagation drops nothing; star drops only self-loop-only nodes
-        assert {n: c for n, c in base.items() if n in star} == star
-        assert set(base) - set(star) <= {
-            a for a, b in g if a == b
-        }, "star variant lost a non-self-loop node"
+        assert star == _union_find_components(g), g
 
 
 def test_sketch_summaries_error_bounds(spark, sf_smoke):

@@ -1,16 +1,16 @@
-"""Scaled-SF bench board (round-15 verdict item 6).
+"""Scaled-SF bench board.
 
     SPARK_GRAFT_SF_DIR=/root/scaled/sf1 python tools/bench_scaled.py [q ...]
 
 sf0.1 sits at the per-job scheduling floor (the r15 driver's 8-core
 run beat the 32-core run), so wall-clock there can no longer resolve
 optimization wins.  This tool runs the most expensive board queries at
-a larger, bench-only SF (tools/gen_scaled_sf.py) with bench.py's exact
-per-query protocol — noop sink, min-of-3..5 with the stability
-extension, clearCache + System.gc between queries — and prints one
-JSON line.  It never touches BENCH_FULL.json and is NOT the driver's
-bench: it exists so before/after numbers for scale-shape changes can
-be demonstrated in seconds instead of job counts.
+a larger, bench-only SF (tools/gen_scaled_sf.py) through bench.py's
+timing loop (`bench.time_entries`) and prints one JSON line.  It never
+touches BENCH_FULL.json and is NOT the driver's bench: it exists so
+before/after numbers for scale-shape changes can be demonstrated in
+seconds instead of job counts.  An A/B of a few queries is
+`bench_scaled.py <q ...>` run once per side.
 """
 
 from __future__ import annotations
@@ -18,13 +18,12 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(
     0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 )
 
-from isaac_kafka_streaming_spark.queries import all_queries  # noqa: E402
+from bench import board_fns, time_entries  # noqa: E402
 from isaac_kafka_streaming_spark.session import get_spark  # noqa: E402
 
 # the 15 most expensive board queries per BENCH_r15 + two floor
@@ -55,36 +54,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/scaled/sf1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     spark = get_spark("isaac-bench-scaled")
-    registry = all_queries()
-    fns = {name: qd.fn for name, qd in registry.items()}
-    from isaac_kafka_streaming_spark.queries import retired_tiers
-
-    fns.update(retired_tiers())
-
-    time.sleep(5)
-    registry["event_type_counts"].fn(spark, sf_dir).write.format(
-        "noop"
-    ).mode("overwrite").save()
-
-    timings: dict[str, float] = {}
-    for name in names:
-        spark.sparkContext.setJobDescription(f"bench-scaled: {name}")
-        runs: list[float] = []
-        for i in range(5):
-            t0 = time.perf_counter()
-            fns[name](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            runs.append(time.perf_counter() - t0)
-            if i >= 2:
-                lo, lo2 = sorted(runs)[:2]
-                if lo2 - lo <= 0.05 * lo + 0.02:
-                    break
-        timings[name] = round(min(runs), 3)
-        spark.sparkContext.setJobDescription(None)
-        spark.catalog.clearCache()
-        spark._jvm.System.gc()
-
+    timings = time_entries(spark, board_fns(), names, sf_dir)
     print(
         json.dumps(
             {

@@ -2,7 +2,11 @@
 queries at sf0.1, each annotated with the property that matters at
 scale (the same properties tests/test_plans.py asserts).
 
-Usage: python tools/gen_plans.py
+Usage: SPARK_GRAFT_CPUS=8 python tools/gen_plans.py
+
+Shuffle widths in the plans follow the session's core count, so the
+header records it; tools/verify_all.py regenerates at the recorded
+count and fails if PLANS.md changes.
 """
 
 from __future__ import annotations
@@ -413,14 +417,15 @@ def main() -> None:
     fmt = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted"
     )
+    cpus = spark.sparkContext.defaultParallelism
     out = [
         '# PLANS — physical plans of the headline queries (sf0.1, '
         '`.explain("formatted")`)',
         "",
-        "Generated by `python tools/gen_plans.py`. What to look for in each "
-        "plan",
-        "is noted above it; tests/test_plans.py asserts the load-bearing "
-        "properties.",
+        f"Generated by `SPARK_GRAFT_CPUS={cpus} python tools/gen_plans.py` "
+        f"(defaultParallelism {cpus}).",
+        "What to look for in each plan is noted above it; "
+        "tests/test_plans.py asserts the load-bearing properties.",
         "",
     ]
     for name, note in PICKS.items():

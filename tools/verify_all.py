@@ -10,6 +10,8 @@ Runs, in order (each in its own process):
      path dependencies the tuned test session would mask)
   3. live-registry oracle parity sweep (driver-exact compare)
   4. whole-surface plan lint (cartesian / Python-eval / global-sort)
+  5. PLANS.md current: tools/gen_plans.py rerun at the core count the
+     file records must leave it unchanged (`git diff --exit-code`)
 
 Exit 0 iff every gate is clean.  The heavy pytest suite and bench are
 NOT included — run those separately (`python -m pytest tests/ -x -q`,
@@ -19,6 +21,9 @@ NOT included — run those separately (`python -m pytest tests/ -x -q`,
 
 from __future__ import annotations
 
+import os
+import re
+import shlex
 import subprocess
 import sys
 from pathlib import Path
@@ -30,9 +35,9 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     results: list[tuple[str, bool, str]] = []
 
-    def run(name: str, cmd: list[str], ok_marker: str) -> None:
+    def run(name: str, cmd: list[str], ok_marker: str, env=None) -> None:
         p = subprocess.run(
-            cmd, capture_output=True, text=True, cwd="/tmp"
+            cmd, capture_output=True, text=True, cwd="/tmp", env=env
         )
         out = (p.stdout or "") + (p.stderr or "")
         ok = p.returncode == 0 and ok_marker in out
@@ -73,6 +78,19 @@ print(f"entry ok: {{n}} rows, {{len(qs)}} queries, {{len(osql)}} oracles")
         "plan-lint",
         [sys.executable, str(REPO / "tools/plan_lint.py")],
         "plans clean",
+    )
+    cpus = re.search(
+        r"SPARK_GRAFT_CPUS=(\d+)", (REPO / "PLANS.md").read_text()
+    ).group(1)
+    plans_env = {**os.environ, "SPARK_GRAFT_CPUS": cpus}
+    plans_env.pop("SPARK_GRAFT_SF_DIR", None)  # the plans are of sf0.1
+    gen, repo = (shlex.quote(str(p)) for p in (REPO / "tools/gen_plans.py", REPO))
+    run(
+        "plans-current",
+        ["sh", "-c", f"{shlex.quote(sys.executable)} {gen} && git -C {repo} "
+         f"diff --exit-code --stat PLANS.md && echo 'PLANS.md current at {cpus} cpus'"],
+        "PLANS.md current",
+        env=plans_env,
     )
 
     width = max(len(n) for n, _, _ in results)
