@@ -26,17 +26,8 @@ from ..io import (
     read_documents_spread as _documents,
     read_table,
 )
-
-# -- shared tokenization (lockstep with the DuckDB twins below) -----------
-
-_TOKEN_SPLIT = "[^a-z0-9]+"
-
-
-def _tokens(col):
-    """lower -> split on non-alphanumeric -> drop empties."""
-    return F.filter(
-        F.split(F.lower(col), _TOKEN_SPLIT), lambda t: t != F.lit("")
-    )
+from ..operators.aggregations import hot_keys
+from .text import _tokens
 
 
 def _shingles(tokens_col, n: int = 3):
@@ -134,15 +125,14 @@ def ngram_jaccard_pairs(
     # cached: the exploded shingle index feeds both sides of the
     # inverted-index self-join (shingle shuffle, reused exchange) —
     # without it the tokenize+shingle scan runs once per shuffle key.
-    # Each index row CARRIES its doc's distinct-shingle count (round
-    # 16; guide §2.3/§8 — attach small decisions without reshuffling
-    # the big side): |shingles| is just F.size of the per-doc array
-    # BEFORE the explode, so the pair aggregate reads sz_a/sz_b off
-    # its own input rows and the old shape's TWO re-exchanges of the
-    # PAIR table (join-by-doc_a + join-by-doc_b against a separately
-    # aggregated sizes frame) are gone, along with the sizes exchange
-    # itself.  Same contract as minhash_lsh_pairs: released via
-    # unpersist_deps by long-lived callers (dedup_clusters).
+    # Each index row CARRIES its doc's distinct-shingle count (guide
+    # §2.3/§8 — attach small decisions without reshuffling the big
+    # side): |shingles| is just F.size of the per-doc array BEFORE the
+    # explode, so the uncapped pair aggregate reads sz_a/sz_b off its
+    # own input rows instead of re-exchanging the PAIR table twice
+    # against a separately aggregated sizes frame.  Same contract as
+    # minhash_lsh_pairs: released via unpersist_deps by long-lived
+    # callers (dedup_clusters).
     arr = docs.select(
         "doc_id", _shingles(_tokens(F.col("text")), n).alias("shingles")
     )
@@ -155,58 +145,43 @@ def ngram_jaccard_pairs(
     )
     sh = sh_cached
     if max_shingle_df is not None:
-        # the capped tier keeps the aggregated-sizes shape: sizes must
-        # be recounted over the FILTERED shingle universe (hot
-        # shingles excised), so the pre-explode array size no longer
-        # equals the per-doc count and cannot be carried
-        # _shingles is per-doc distinct, so count(*) == document frequency
-        hot = (
-            sh.groupBy("shingle")
-            .agg(F.count("*").alias("df"))
-            .filter(F.col("df") > max_shingle_df)
-            .select("shingle")
+        # _shingles is per-doc distinct, so a shingle's row count is
+        # its document frequency
+        sh = sh.join(
+            hot_keys(sh, ["shingle"], max_shingle_df), "shingle", "left_anti"
         )
-        sh = sh.join(hot, "shingle", "left_anti")
-        sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_shingles"))
-        a = sh.alias("a")
-        b = sh.alias("b")
-        inter = (
-            a.join(b, (F.col("a.shingle") == F.col("b.shingle"))
-                   & (F.col("a.doc_id") < F.col("b.doc_id")))
-            .groupBy(
-                F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"),
-            )
-            .agg(F.count("*").alias("n_common"))
-        )
-        sa = sizes.select(
-            F.col("doc_id").alias("doc_a"),
-            F.col("n_shingles").alias("sz_a"),
-        )
-        sb = sizes.select(
-            F.col("doc_id").alias("doc_b"),
-            F.col("n_shingles").alias("sz_b"),
-        )
-        inter = inter.join(sa, "doc_a").join(sb, "doc_b")
-    else:
-        a = sh.alias("a")
-        b = sh.alias("b")
+    a = sh.alias("a")
+    b = sh.alias("b")
+    pairs = a.join(
+        b,
+        (F.col("a.shingle") == F.col("b.shingle"))
+        & (F.col("a.doc_id") < F.col("b.doc_id")),
+    ).groupBy(
+        F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
+    )
+    if max_shingle_df is None:
         # sz_a/sz_b are constant within each (doc_a, doc_b) group
         # (functionally dependent on the doc keys); min() reads the
         # value with map-side partial aggregation, no extra exchange
-        inter = (
-            a.join(b, (F.col("a.shingle") == F.col("b.shingle"))
-                   & (F.col("a.doc_id") < F.col("b.doc_id")))
-            .groupBy(
-                F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"),
-            )
-            .agg(
-                F.count("*").alias("n_common"),
-                F.min(F.col("a.sz")).alias("sz_a"),
-                F.min(F.col("b.sz")).alias("sz_b"),
-            )
+        inter = pairs.agg(
+            F.count("*").alias("n_common"),
+            F.min(F.col("a.sz")).alias("sz_a"),
+            F.min(F.col("b.sz")).alias("sz_b"),
         )
+    else:
+        # sizes are recounted over the FILTERED shingle universe (hot
+        # shingles excised), so the carried pre-explode size no longer
+        # equals the per-doc count
+        sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_shingles"))
+        inter = pairs.agg(F.count("*").alias("n_common"))
+        for side in ("a", "b"):
+            inter = inter.join(
+                sizes.select(
+                    F.col("doc_id").alias(f"doc_{side}"),
+                    F.col("n_shingles").alias(f"sz_{side}"),
+                ),
+                f"doc_{side}",
+            )
     jac = F.col("n_common") / (F.col("sz_a") + F.col("sz_b") - F.col("n_common"))
     out = (
         inter.withColumn("jaccard", F.round(jac, 6))
@@ -281,10 +256,40 @@ def _minhash_signatures(shingled: DataFrame, num_hashes: int = NUM_HASHES):
     )
 
 
-def _band_keys(
-    sigs: DataFrame, num_hashes: int, band_size: int
+def _shingle_index(spark: SparkSession, sf_dir: str, n: int) -> DataFrame:
+    """The cached (doc_id, shingles) frame every MinHash tier builds on.
+
+    The spread read fans a single-split source out across cores before
+    the per-document expressions (a no-op at scale, where the scan is
+    already parallel).  Cached because the shingle arrays feed the
+    signature explode AND both sides of the verification join —
+    without it the tokenization runs 4x.  At 100 TB this intermediate
+    is written to a temp table instead.  Released by unpersist_deps
+    (see minhash_lsh_pairs)."""
+    docs = _documents(spark, sf_dir)
+    return _cache_once(
+        docs.select(
+            "doc_id",
+            _shingles(_tokens(F.col("text")), n).alias("shingles"),
+        )
+    )
+
+
+# band-key expression per hash family, keyed by the band table's key
+# column: a hashed band value (xxhash64) or the plain comma-joined
+# signature slice (engine-neutral md5 family, exact string equality in
+# both engines)
+_BAND_KEY = {
+    "band_hash": lambda cols: F.xxhash64(*cols),
+    "band_key": lambda cols: F.concat_ws(",", *[c.cast("string") for c in cols]),
+}
+
+
+def _band_table(
+    sigs: DataFrame, num_hashes: int, band_size: int, key: str
 ) -> DataFrame:
-    """Signature rows -> exploded (doc_id, band, band_hash) LSH keys."""
+    """Signature rows h0..h{n-1} -> exploded (doc_id, band, ``key``) LSH
+    band table, ``key`` naming the family's band-key expression."""
     n_bands = num_hashes // band_size
     return sigs.select(
         "doc_id",
@@ -293,18 +298,49 @@ def _band_keys(
                 *[
                     F.struct(
                         F.lit(bi).alias("band"),
-                        F.xxhash64(
-                            *[
+                        _BAND_KEY[key](
+                            [
                                 F.col(f"h{bi * band_size + j}")
                                 for j in range(band_size)
                             ]
-                        ).alias("band_hash"),
+                        ).alias(key),
                     )
                     for bi in range(n_bands)
                 ]
             )
         ).alias("bk"),
-    ).select("doc_id", "bk.band", "bk.band_hash")
+    ).select("doc_id", "bk.band", f"bk.{key}")
+
+
+def _verify_jaccard(
+    candidates: DataFrame,
+    shingled: DataFrame,
+    left: str,
+    right: str,
+    threshold: float,
+) -> DataFrame:
+    """Exact shingle-Jaccard verification of candidate pairs: each side
+    of ``candidates`` (doc-id columns ``left``/``right``) joins its
+    shingle array, jaccard = round(|A ∩ B| / |A ∪ B|, 6), kept at
+    >= ``threshold``."""
+    sides = [(c, c.replace("doc", "sh")) for c in (left, right)]
+    for doc_col, sh_col in sides:
+        candidates = candidates.join(
+            shingled.select(
+                F.col("doc_id").alias(doc_col),
+                F.col("shingles").alias(sh_col),
+            ),
+            doc_col,
+        )
+    sh_l, sh_r = (sh_col for _, sh_col in sides)
+    return candidates.withColumn(
+        "jaccard",
+        F.round(
+            F.size(F.array_intersect(sh_l, sh_r))
+            / F.size(F.array_union(sh_l, sh_r)),
+            6,
+        ),
+    ).filter(F.col("jaccard") >= threshold)
 
 
 def minhash_lsh_pairs(
@@ -341,28 +377,11 @@ def minhash_lsh_pairs(
     result (see dedup_clusters).  One-shot graded/bench runs may skip
     it — session teardown clears the blocks.
     """
-    # a small single-file source reads as one scan partition: spread
-    # the signature computation across cores before the heavy
-    # per-document expressions.  At 100 TB the scan is already
-    # parallel and the guard makes this a no-op (round 13: previously
-    # an unconditional repartition, i.e. a pointless full-corpus
-    # shuffle at scale).
-    docs = _documents(spark, sf_dir)
-    # cached: the shingle arrays feed the signature explode AND twice
-    # the verification join — without it the tokenization runs 4x.
-    # At 100 TB this intermediate is written to a temp table instead.
-    shingled = _cache_once(
-        docs.select(
-            "doc_id",
-            _shingles(_tokens(F.col("text")), n).alias("shingles"),
-        )
-    )
-
+    shingled = _shingle_index(spark, sf_dir, n)
     # cached: one row of 64 longs per doc (tiny); the band fanout
     # self-joins, so without it the signature agg runs twice.
     sigs = _cache_once(_minhash_signatures(shingled, num_hashes))
-
-    bands = _band_keys(sigs, num_hashes, band_size)
+    bands = _band_table(sigs, num_hashes, band_size, "band_hash")
     verified = _lsh_pairs_verify(
         bands, shingled, ["band", "band_hash"], threshold, max_bucket_size
     )
@@ -377,23 +396,14 @@ def _lsh_pairs_verify(
     threshold: float,
     max_bucket_size: int | None,
 ) -> DataFrame:
-    """Shared banded-bucket self-join + exact-Jaccard verification
-    behind BOTH full-corpus MinHash tiers (minhash_lsh_pairs on
-    xxhash64 band_hash keys, minhash_lsh_pairs_md5 on md5 band_key
-    strings) — the hash family is the ONLY thing that differs between
-    the tiers, so the bucket join, hot-bucket excision, verification,
-    and output contract live once (the round-9 retire-merge: a cap or
-    tie-break fix can never apply to one tier and silently miss the
-    other, the _incoming_probe_best_match discipline)."""
+    """Banded-bucket self-join + exact-Jaccard verification behind both
+    full-corpus MinHash tiers (minhash_lsh_pairs on xxhash64 band_hash
+    keys, minhash_lsh_pairs_md5 on md5 band_key strings): the hash
+    family is the only thing that differs between them."""
     if max_bucket_size is not None:
-        wide = (
-            bands.groupBy(*key_cols)
-            .agg(F.count("*").alias("width"))
-            .filter(F.col("width") > max_bucket_size)
-            .select(*key_cols)
+        bands = bands.join(
+            hot_keys(bands, key_cols, max_bucket_size), key_cols, "left_anti"
         )
-        bands = bands.join(wide, key_cols, "left_anti")
-
     a = bands.alias("a")
     b = bands.alias("b")
     join_cond = F.col("a.doc_id") < F.col("b.doc_id")
@@ -407,32 +417,9 @@ def _lsh_pairs_verify(
         )
         .distinct()
     )
-    return (
-        candidates.join(
-            shingled.select(
-                F.col("doc_id").alias("doc_a"),
-                F.col("shingles").alias("sh_a"),
-            ),
-            "doc_a",
-        )
-        .join(
-            shingled.select(
-                F.col("doc_id").alias("doc_b"),
-                F.col("shingles").alias("sh_b"),
-            ),
-            "doc_b",
-        )
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.size(F.array_intersect("sh_a", "sh_b"))
-                / F.size(F.array_union("sh_a", "sh_b")),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
+    return _verify_jaccard(
+        candidates, shingled, "doc_a", "doc_b", threshold
+    ).select("doc_a", "doc_b", "jaccard")
 
 
 def _md5long(col):
@@ -446,13 +433,12 @@ def _md5_band_table(
     shingled: DataFrame, num_hashes: int, band_size: int
 ) -> DataFrame:
     """(doc_id, band, band_key) LSH band table on the engine-neutral
-    md5 hash family — the shared build behind minhash_lsh_pairs_md5
-    (full self-join witness) and dedup_incoming_minhash_md5 (incoming
-    probe witness).  One md5 per shingle feeds Broder's 2-universal
-    linear family: h1 = 60 digest bits, h2 = the next 56, seed-i hash
-    = (h1 + i*h2) mod 2^60 — exact integer arithmetic both engines
-    replay bit-for-bit; band keys are plain comma-joined signature
-    slices (exact string equality in both engines)."""
+    md5 hash family — the build behind minhash_lsh_pairs_md5 (full
+    self-join witness) and dedup_incoming_minhash_md5 (incoming probe
+    witness).  One md5 per shingle feeds Broder's 2-universal linear
+    family: h1 = 60 digest bits, h2 = the next 56, seed-i hash =
+    (h1 + i*h2) mod 2^60 — exact integer arithmetic both engines
+    replay bit-for-bit."""
     exploded = (
         shingled.select("doc_id", F.explode("shingles").alias("s"))
         .withColumn("md", F.md5("s"))
@@ -473,29 +459,7 @@ def _md5_band_table(
             for i in range(num_hashes)
         ]
     )
-    n_bands = num_hashes // band_size
-    return sigs.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(bi).alias("band"),
-                        F.concat_ws(
-                            ",",
-                            *[
-                                F.col(f"h{bi * band_size + j}").cast(
-                                    "string"
-                                )
-                                for j in range(band_size)
-                            ],
-                        ).alias("band_key"),
-                    )
-                    for bi in range(n_bands)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "bk.band", "bk.band_key")
+    return _band_table(sigs, num_hashes, band_size, "band_key")
 
 
 def minhash_lsh_pairs_md5(
@@ -528,16 +492,9 @@ def minhash_lsh_pairs_md5(
     clears the threshold); on driver testdata the two emit the SAME
     pair set (pinned in tests/test_dedup_guards.py).  The bucket join
     + verification pipeline IS the production tier's
-    (_lsh_pairs_verify — retire-merged round 10): only the band-table
-    hash family differs.
+    (_lsh_pairs_verify): only the band-table hash family differs.
     """
-    docs = _documents(spark, sf_dir)
-    shingled = _cache_once(
-        docs.select(
-            "doc_id",
-            _shingles(_tokens(F.col("text")), n).alias("shingles"),
-        )
-    )
+    shingled = _shingle_index(spark, sf_dir, n)
     bands = _md5_band_table(shingled, num_hashes, band_size)
     verified = _lsh_pairs_verify(
         bands, shingled, ["band", "band_key"], threshold, max_bucket_size
@@ -559,8 +516,7 @@ def dedup_incoming_minhash_md5(
     """X2 — the INCOMING-PROBE near-dup mechanism on the engine-neutral
     md5 hash family: the oracle-checked witness for
     dedup_incoming_minhash (whose xxhash64 signatures keep it
-    rows-only), completing the witness program the round-6 MinHash and
-    SimHash md5 twins started.
+    rows-only), like the MinHash and SimHash md5 twins.
 
     Same pipeline as the production tier: the incoming slice
     (deterministic md5 bucket, salt 'inc' — identical split to
@@ -576,13 +532,7 @@ def dedup_incoming_minhash_md5(
     Scale shape is the production tier's: per-batch cost scales with
     the incoming slice, the corpus band table is the precomputed index
     each crawl probes."""
-    docs = _documents(spark, sf_dir)
-    shingled = _cache_once(
-        docs.select(
-            "doc_id",
-            _shingles(_tokens(F.col("text")), n).alias("shingles"),
-        )
-    )
+    shingled = _shingle_index(spark, sf_dir, n)
     bands = _cache_once(_md5_band_table(shingled, num_hashes, band_size))
     best = _incoming_probe_best_match(
         bands, shingled, ["band", "band_key"], threshold, incoming_pct,
@@ -600,26 +550,20 @@ def _incoming_probe_best_match(
     incoming_pct: int,
     max_bucket_size: int | None,
 ) -> DataFrame:
-    """Shared incoming-vs-existing probe pipeline behind BOTH incoming
-    near-dup tiers (dedup_incoming_minhash on xxhash band_hash keys,
+    """Incoming-vs-existing probe pipeline behind both incoming near-dup
+    tiers (dedup_incoming_minhash on xxhash band_hash keys,
     dedup_incoming_minhash_md5 on md5 band_key strings): md5 'inc'
     slice split, optional hot-bucket excision (width measured over
     both slices), incoming x existing candidate equi-join on
     ``key_cols``, exact shingle-Jaccard verification, and the
-    best-match window (highest jaccard, lowest existing doc_id).
-    One implementation so a cap or tie-break fix can never apply to
-    one tier and silently miss the other."""
+    best-match rule (highest jaccard, lowest existing doc_id)."""
     from .sampling import _bucket
 
     bands = bands.withColumn("bucket", _bucket(F.col("doc_id"), "inc"))
     if max_bucket_size is not None:
-        wide = (
-            bands.groupBy(*key_cols)
-            .agg(F.count("*").alias("width"))
-            .filter(F.col("width") > max_bucket_size)
-            .select(*key_cols)
+        bands = bands.join(
+            hot_keys(bands, key_cols, max_bucket_size), key_cols, "left_anti"
         )
-        bands = bands.join(wide, key_cols, "left_anti")
     cut = 100 - incoming_pct
     inc = bands.filter(F.col("bucket") >= cut).select(
         F.col("doc_id").alias("doc_new"), *key_cols
@@ -630,36 +574,14 @@ def _incoming_probe_best_match(
     candidates = (
         inc.join(ref, key_cols).select("doc_new", "doc_ref").distinct()
     )
-    verified = (
-        candidates.join(
-            shingled.select(
-                F.col("doc_id").alias("doc_new"),
-                F.col("shingles").alias("sh_new"),
-            ),
-            "doc_new",
-        )
-        .join(
-            shingled.select(
-                F.col("doc_id").alias("doc_ref"),
-                F.col("shingles").alias("sh_ref"),
-            ),
-            "doc_ref",
-        )
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.size(F.array_intersect("sh_new", "sh_ref"))
-                / F.size(F.array_union("sh_new", "sh_ref")),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
+    verified = _verify_jaccard(
+        candidates, shingled, "doc_new", "doc_ref", threshold
     )
     # best-match argmax as a partial-aggregating max(struct) — the
     # (jaccard DESC, doc_ref ASC) rule as max of (jaccard, -doc_ref);
     # map-side combine instead of a window exchange + sort over the
-    # candidate-pair frame (round-15, same rewrite as the similarity
-    # family's _nearest_cell)
+    # candidate-pair frame (same rewrite as the similarity family's
+    # _nearest_cell)
     return (
         verified.groupBy("doc_new")
         .agg(
@@ -780,8 +702,7 @@ def _simhash_chunk_join(
     behind BOTH SimHash tiers (simhash_pairs' 64-bit xxhash64
     signatures in 4x16-bit chunks, simhash_pairs_md5's 60-bit md5
     signatures in 4x15-bit chunks) — the signature hash family is the
-    only difference between the tiers, so the banding and verification
-    live once (the _lsh_pairs_verify retire-merge discipline).
+    only difference between the tiers.
     ``sigs``: (doc_id, simhash long)."""
     mask = (1 << chunk_bits) - 1
     chunks = sigs.select(
@@ -990,23 +911,21 @@ def dedup_clusters(
       LSH output is a subset of the exact tier's (identical on driver
       data — asserted in tests/test_dedup_guards.py).
     """
-    if pair_tier == "exact":
-        pairs = ngram_jaccard_pairs(spark, sf_dir, threshold=threshold)
-        try:
-            comp = connected_components_star(pairs)
-        finally:
-            unpersist_deps(pairs)
-    else:
-        pairs = minhash_lsh_pairs(spark, sf_dir, threshold=threshold)
-        try:
-            # the star alternation localCheckpoint()s the edge set up
-            # front, so the pair computation (and the caches
-            # minhash_lsh_pairs attached to it) runs exactly once ...
-            comp = connected_components_star(pairs)
-        finally:
-            # ... and can be released as soon as that materialization is
-            # done, even though the returned DataFrame is still lazy.
-            unpersist_deps(pairs)
+    pair_fns = {"exact": ngram_jaccard_pairs, "lsh": minhash_lsh_pairs}
+    if pair_tier not in pair_fns:
+        raise ValueError(
+            f"pair_tier must be 'exact' or 'lsh', got {pair_tier!r}"
+        )
+    pairs = pair_fns[pair_tier](spark, sf_dir, threshold=threshold)
+    try:
+        # the star alternation localCheckpoint()s the edge set up front,
+        # so the pair computation (and the caches the pair tier attached
+        # to it) runs exactly once ...
+        comp = connected_components_star(pairs)
+    finally:
+        # ... and can be released as soon as that materialization is
+        # done, even though the returned DataFrame is still lazy.
+        unpersist_deps(pairs)
     return comp.select(
         F.col("node").alias("doc_id"),
         F.col("comp").alias("cluster_id"),
@@ -1055,12 +974,12 @@ def contained_documents(
         .filter(F.col("a.df") > 1)  # df==1 = only the doc itself
     )
     if max_anchor_df is not None:
-        # hot-anchor cap (round-7; same doctrine as the band-bucket
-        # caps): the anchor join fans out by the RAREST shared
-        # shingle's df, so a doc whose least-common shingle is still
-        # shared by > cap docs is wall-to-wall boilerplate or an
-        # exact-dup clique — both owned by the hash/normalized tiers —
-        # and is excised rather than allowed a df-wide probe.
+        # hot-anchor cap (same doctrine as the band-bucket caps): the
+        # anchor join fans out by the RAREST shared shingle's df, so a
+        # doc whose least-common shingle is still shared by > cap docs
+        # is wall-to-wall boilerplate or an exact-dup clique — both
+        # owned by the hash/normalized tiers — and is excised rather
+        # than allowed a df-wide probe.
         anchors = anchors.filter(F.col("a.df") <= max_anchor_df)
     anchors = anchors.select("doc_id", F.col("a.shingle").alias("anchor"))
     cands = (
@@ -1329,13 +1248,7 @@ def hot_passage_spans(
         "doc_id",
         F.explode(_block_grid(F.col("tokens"), block)).alias("btext"),
     )
-    return (
-        blocks.distinct()
-        .groupBy("btext")
-        .agg(F.count("*").alias("df"))
-        .filter(F.col("df") > max_df)
-        .select("btext")
-    )
+    return hot_keys(blocks.distinct(), ["btext"], max_df)
 
 
 def passage_scrub(
@@ -2018,7 +1931,7 @@ def dedup_incoming_minhash(
     tests/test_dedup_guards.py.
 
     ``max_bucket_size`` is the same hot-band guard minhash_lsh_pairs
-    carries (round-7 addition): a boilerplate band bucket of width w
+    carries: a boilerplate band bucket of width w
     still fans out ~0.1w x 0.9w candidate rows through the
     incoming x existing join, so buckets wider than the cap (measured
     over BOTH slices — the boilerplate cluster spans them) are
@@ -2027,15 +1940,9 @@ def dedup_incoming_minhash(
     already catches.  Fan-out bound pinned in
     tests/test_dedup_guards.py.
     """
-    docs = _documents(spark, sf_dir)
-    shingled = _cache_once(
-        docs.select(
-            "doc_id",
-            _shingles(_tokens(F.col("text")), n).alias("shingles"),
-        )
-    )
+    shingled = _shingle_index(spark, sf_dir, n)
     sigs = _cache_once(_minhash_signatures(shingled, num_hashes))
-    bands = _band_keys(sigs, num_hashes, band_size)
+    bands = _band_table(sigs, num_hashes, band_size, "band_hash")
     best = _incoming_probe_best_match(
         bands, shingled, ["band", "band_hash"], threshold, incoming_pct,
         max_bucket_size,

@@ -205,12 +205,10 @@ def _page_graph(
     each event's purchase flag, so the per-(src, dst) aggregate ALSO
     sums purchases — summing those over dst yields exactly the
     per-page purchase count (_purchase_seeds' aggregate: every event
-    row emits one seq row keyed by its own page id), and the seed
-    top-k (count DESC, page_id tie-break, zero-purchase pages
-    excluded like the purchase-filtered scan excludes them) reads the
-    page-catalog-sized group checkpoint instead of paying a SECOND
-    full event-log scan + JSON parse.  The plain branch is untouched
-    — pagerank/LP/CC plans stay byte-identical."""
+    row emits one seq row keyed by its own page id), and _top_seeds
+    reads the page-catalog-sized group checkpoint instead of paying a
+    SECOND full event-log scan + JSON parse.  The plain branch is
+    untouched — pagerank/LP/CC plans stay byte-identical."""
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     if with_purchase_counts:
         ev = _page_events(spark, sf_dir, extra_cols=("event_type",))
@@ -233,13 +231,10 @@ def _page_graph(
         edges = grouped.filter(
             F.col("dst").isNotNull() & (F.col("dst") != F.col("src"))
         ).select("src", "dst", "w")
-        seeds = (
-            grouped.groupBy("src")
-            .agg(F.sum("np").alias("n_purch"))
-            .filter(F.col("n_purch") > 0)
-            .orderBy(F.col("n_purch").desc(), F.col("src"))
-            .limit(PPR_N_SEEDS)
-            .select(F.col("src").alias("page_id"))
+        seeds = _top_seeds(
+            grouped.groupBy(F.col("src").alias("page_id")).agg(
+                F.sum("np").alias("n_purch")
+            )
         )
         return nodes, edges, seeds
     ev = _page_events(spark, sf_dir)
@@ -530,12 +525,26 @@ def pagerank_from_stores(
 PPR_N_SEEDS = 10
 
 
+def _top_seeds(counts: DataFrame, n_seeds: int = PPR_N_SEEDS) -> DataFrame:
+    """The one PPR seed rule over per-page purchase counts
+    (page_id, n_purch): the ``n_seeds`` pages with the most purchases,
+    count DESC with a page_id tie-break, zero-purchase pages excluded.
+    orderBy + limit plans as TakeOrderedAndProject — a distributed
+    per-partition top-k merged on the driver, never a global sort."""
+    return (
+        counts.filter(F.col("n_purch") > 0)
+        .orderBy(F.col("n_purch").desc(), F.col("page_id"))
+        .limit(n_seeds)
+        .select("page_id")
+    )
+
+
 def _purchase_seeds(
     spark: SparkSession, sf_dir: str, n_seeds: int = PPR_N_SEEDS
 ) -> DataFrame:
-    """The seed set for personalized PageRank: the ``n_seeds`` pages
-    with the most purchase events (count DESC, page_id tie-break) —
-    the conversion-densest slice a relevance expansion starts from.
+    """The seed set for personalized PageRank: _top_seeds over a
+    purchase-filtered event scan — the conversion-densest slice a
+    relevance expansion starts from.
     A fixed-size top-k stays selective at EVERY data scale, unlike a
     value threshold the growing event log would saturate."""
     counted = (
@@ -546,13 +555,7 @@ def _purchase_seeds(
         .groupBy(F.col("k").alias("page_id"))
         .agg(F.count("*").alias("n_purch"))
     )
-    # orderBy + limit plans as TakeOrderedAndProject — a distributed
-    # per-partition top-k merged on the driver, never a global sort
-    return (
-        counted.orderBy(F.col("n_purch").desc(), F.col("page_id"))
-        .limit(n_seeds)
-        .select("page_id")
-    )
+    return _top_seeds(counted, n_seeds)
 
 
 def pagerank_personalized(
@@ -577,14 +580,10 @@ def pagerank_personalized(
     unreachable from any seed stay at exactly 0.  Same scale shape,
     lockstep rounding, and unrolled-CTE oracle as the uniform tier.
     Output: (page_id, ppr, rank) over the full catalog."""
-    # one event-log pass for graph AND seeds (round 16): the purchase
-    # top-k rides the _page_graph group checkpoint instead of paying
-    # a second full scan + JSON parse (the same one-pass discipline
-    # the round-16 node-catalog fusion applied).  _purchase_seeds
-    # stays the standalone form (the streamed-store twin and tests
-    # pin its TakeOrderedAndProject shape); seed sets are identical
-    # by construction — integer counts, same (count DESC, page_id)
-    # rule, zero-purchase pages excluded on both paths.
+    # one event-log pass for graph AND seeds: the purchase top-k rides
+    # the _page_graph group checkpoint instead of paying a second full
+    # scan + JSON parse.  _purchase_seeds stays the standalone form;
+    # both apply _top_seeds to the same integer per-page counts.
     nodes, edges, seeds = _page_graph(
         spark, sf_dir, with_purchase_counts=True
     )
@@ -1107,13 +1106,8 @@ def seeds_from_purchase_store(
     purchase_counts: DataFrame, n_seeds: int = PPR_N_SEEDS
 ) -> DataFrame:
     """Read-time seed selection over the STREAMED purchase-count store
-    (topology.streaming_purchase_page_counts): the same top-k rule as
-    the batch _purchase_seeds — count DESC, page_id tie-break."""
-    return (
-        purchase_counts.orderBy(F.col("n_purch").desc(), F.col("page_id"))
-        .limit(n_seeds)
-        .select("page_id")
-    )
+    (topology.streaming_purchase_page_counts): the batch seed rule."""
+    return _top_seeds(purchase_counts, n_seeds)
 
 
 def ppr_from_stores(

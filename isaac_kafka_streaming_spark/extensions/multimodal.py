@@ -2197,7 +2197,7 @@ def _curate_and_mix(ingested: DataFrame, docs: DataFrame) -> DataFrame:
     ``docs``: the metadata table."""
     from pyspark.sql import Window
 
-    from .dedup import _tokens
+    from .text import _tokens
     from .text import _STOPWORDS, _n_in
 
     joined = ingested.join(docs.select("doc_id", "lang"), "doc_id")

@@ -21,6 +21,7 @@ from ..io import (
     read_documents_spread as _documents,
     read_table,
 )
+from ..operators.aggregations import hot_keys
 
 # per-language downsampling rates (percent kept) for the stratified
 # sample: the dominant language is halved, the rest kept whole — the
@@ -162,11 +163,12 @@ def ngram_contamination(
         F.explode(_shingles(_tokens(F.col("text")), n)).alias("shingle"),
     )
     if max_shingle_df is not None:
-        hot = (
-            sh.groupBy("shingle")
-            .agg(F.count_distinct("doc_id").alias("df"))
-            .filter(F.col("df") > max_shingle_df)
-            .select("shingle")
+        # distinct (shingle, doc_id) rows: their count per shingle is
+        # count_distinct(doc_id), whatever the doc_id multiplicity
+        hot = hot_keys(
+            sh.select("shingle", "doc_id").distinct(),
+            ["shingle"],
+            max_shingle_df,
         )
         sh = sh.join(hot, "shingle", "left_anti")
     train_sh = (
@@ -225,7 +227,8 @@ def decontaminate_exact(
     LIKE scan of the naive form never appears.
     """
     docs = _documents(spark, sf_dir)
-    from .dedup import _shingles, _tokens
+    from .dedup import _shingles
+    from .text import _tokens
 
     # round 8: split via the shared with_split projection (no
     # self-join; 10 documents scans -> 5 — see with_split's docstring)
@@ -311,7 +314,7 @@ def temperature_mixture_plan(
     Registered for driver grading in round 7 (round-6 window is
     saturated); TEMPERATURE_MIXTURE_ORACLE_SQL below is parity-tested.
     """
-    from .dedup import _tokens
+    from .text import _tokens
 
     docs = _documents(spark, sf_dir)
     per_lang = (
@@ -412,7 +415,8 @@ def eval_anchor_index(eval_docs: DataFrame, n: int = 5) -> DataFrame:
     train corpus; the eval side here is small and broadcast).  Docs
     with < n tokens have no shingles and are not checked (same
     contract as decontaminate_exact)."""
-    from .dedup import _shingles, _tokens
+    from .dedup import _shingles
+    from .text import _tokens
 
     base = eval_docs.select(
         F.col("doc_id").alias("eval_doc_id"),

@@ -28,6 +28,9 @@ _STOPWORDS = tuple(sorted({w for ws in LANG_MARKERS.values() for w in ws}))
 
 
 def _tokens(col):
+    """lower -> split on non-alphanumeric -> drop empties: the package's
+    one token definition (lockstep with the DuckDB twins'
+    regexp_split_to_array + list_filter)."""
     return F.filter(F.split(F.lower(col), _TOKEN_SPLIT), lambda t: t != F.lit(""))
 
 
@@ -685,6 +688,8 @@ def char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     length) -> entropy as a sum over <= |alphabet| terms.  Rounded to
     6: the <= 1e-14 cross-engine summation-order noise on ~100 terms
     sits far below the rounding grain, so the oracle hash-matches.
+    A zero-shuffle per-row form (array_distinct + per-symbol
+    filter-size) measured 2.98 s vs 0.73 s at sf0.1 and was rejected.
     """
     docs = _documents(spark, sf_dir)
     # split("") yields CODE POINTS (Java 8+ zero-width split never cuts a
@@ -2120,33 +2125,6 @@ CROSS JOIN total
 ORDER BY pmi DESC, w1, w2
 LIMIT {PMI_TOP_K}
 """
-
-
-def char_entropy_hof(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Zero-shuffle variant of char_entropy: per-doc character counts
-    via higher-order functions (array_distinct + filter-size per
-    symbol) instead of explode + two-level agg.  Pure projection — no
-    exchange at all — at the cost of O(len x |alphabet|) CPU per doc
-    vs the explode form's O(len) + a docs x alphabet shuffle.  Kept as
-    a benched alternative (equality-tested against the graded form);
-    SCALE_DESIGN.md records the measured tradeoff at sf0.1."""
-    docs = _documents(spark, sf_dir)
-    chars = F.filter(F.split(F.col("text"), ""), lambda c: c != F.lit(""))
-    counts = F.transform(
-        F.array_distinct(chars),
-        lambda c: F.size(F.filter(chars, lambda x: x == c)),
-    )
-    n = F.size(chars)
-    sum_nlogn = F.aggregate(
-        counts,
-        F.lit(0.0),
-        lambda acc, ni: acc + ni * F.log2(ni),
-    )
-    return docs.select(
-        "doc_id",
-        n.cast("long").alias("n_chars"),
-        F.round(F.log2(n) - sum_nlogn / n, 6).alias("entropy_bits"),
-    ).filter(F.col("n_chars") > 0)
 
 
 NB_ALPHA = 1.0

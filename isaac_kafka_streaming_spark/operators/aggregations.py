@@ -65,6 +65,22 @@ def count_by_key(df: DataFrame, key_cols: Sequence[str], alias: str = "n") -> Da
     return df.groupBy(*key_cols).agg(F.count("*").alias(alias))
 
 
+def hot_keys(df: DataFrame, keys: Sequence[str], cap: int) -> DataFrame:
+    """The ``keys`` values that occur in more than ``cap`` rows of ``df``.
+
+    The one hot-key cap behind every skew guard (hot shingles, wide LSH
+    band buckets, bot users, boilerplate spans): callers anti-join the
+    result away, or flag against it.  The count is map-side combinable,
+    and the list is small by a counting bound (at most
+    rows/cap entries), so AQE broadcasts it into the join."""
+    return (
+        df.groupBy(*keys)
+        .agg(F.count("*").alias("__n"))
+        .filter(F.col("__n") > cap)
+        .select(*keys)
+    )
+
+
 def count_and_latest(
     df: DataFrame, key_cols: Sequence[str], ts_col: str
 ) -> DataFrame:

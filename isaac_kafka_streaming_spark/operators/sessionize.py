@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .aggregations import hot_keys
+
 
 def sessionize(
     df: DataFrame,
@@ -46,13 +48,9 @@ def sessionize(
     preserves exact graded semantics.
     """
     if max_events_per_user is not None:
-        hot = (
-            df.groupBy(user_col)
-            .agg(F.count("*").alias("__n"))
-            .filter(F.col("__n") > max_events_per_user)
-            .select(user_col)
+        df = df.join(
+            hot_keys(df, [user_col], max_events_per_user), user_col, "left_anti"
         )
-        df = df.join(hot, user_col, "left_anti")
     w = Window.partitionBy(user_col).orderBy(ts_col)
     gap_ms = gap_seconds * 1000
     ts_ms = F.unix_millis(F.col(ts_col))

@@ -291,7 +291,8 @@ def streaming_passage_scrub(
     store; per-row work is bounded by the doc's own span count.  The
     grid expression is SHARED with the batch form (_block_grid), so
     the two can never cut differently."""
-    from ..extensions.dedup import _block_grid, _tokens
+    from ..extensions.dedup import _block_grid
+    from ..extensions.text import _tokens
 
     hot1 = hot_spans.agg(F.collect_set("btext").alias("hot_set"))
     toks = docs_stream.select(
@@ -471,7 +472,8 @@ def streaming_decontaminate(
     negatives, choice-independent output) per eval_anchor_index's
     docstring.
     """
-    from ..extensions.dedup import _shingles, _tokens
+    from ..extensions.dedup import _shingles
+    from ..extensions.text import _tokens
 
     base = docs_stream.select(
         F.col("doc_id").alias("train_doc_id"),

@@ -64,7 +64,8 @@ def test_ngram_cap_bounds_fanout(spark, boiler_dir):
     assert _pairs(ngram_jaccard_pairs(spark, boiler_dir, threshold=0.1))
     # capped: no surviving shingle is shared by more than the cutoff
     docs = spark.read.parquet(f"{boiler_dir}/documents.parquet")
-    from isaac_kafka_streaming_spark.extensions.dedup import _shingles, _tokens
+    from isaac_kafka_streaming_spark.extensions.dedup import _shingles
+    from isaac_kafka_streaming_spark.extensions.text import _tokens
 
     sh = docs.select(
         "doc_id", F.explode(_shingles(_tokens(F.col("text")))).alias("shingle")
@@ -547,6 +548,15 @@ def test_dedup_clusters_tiers_same_clusters(spark, sf_smoke):
         map(tuple, dedup_clusters(spark, sf_smoke, pair_tier="lsh").collect())
     )
     assert exact == lsh and exact
+
+
+def test_dedup_clusters_rejects_unknown_pair_tier():
+    """An unknown pair tier is an error naming both tiers, raised before
+    any Spark work — not a silent fall-through to the LSH tier."""
+    from isaac_kafka_streaming_spark.extensions.dedup import dedup_clusters
+
+    with pytest.raises(ValueError, match="'exact' or 'lsh'.*'minhash'"):
+        dedup_clusters(None, "unused", pair_tier="minhash")
 
 
 def test_minhash_md5_witness_matches_production_tier(spark, sf_smoke):

@@ -18,6 +18,7 @@ from isaac_kafka_streaming_spark.functions.scalars import (
     json_str,
 )
 from isaac_kafka_streaming_spark.operators.aggregations import (
+    hot_keys,
     last_seen,
     latest_per_key,
 )
@@ -416,6 +417,18 @@ def test_sessionize_skew_cap(spark):
     assert sorted(
         map(tuple, sessionize(df, gap_seconds=60, max_events_per_user=500).collect())
     ) == sorted(map(tuple, uncapped.collect()))
+
+
+def test_hot_keys_cap_boundary(spark):
+    """A key with exactly cap rows is kept (not hot); one with cap + 1
+    rows is hot and gets dropped — the boundary every skew cap
+    inherits from hot_keys."""
+    cap = 3
+    rows = [("at_cap", i) for i in range(cap)] + [
+        ("over_cap", i) for i in range(cap + 1)
+    ]
+    df = spark.createDataFrame(rows, "k string, v int")
+    assert [r.k for r in hot_keys(df, ["k"], cap).collect()] == ["over_cap"]
 
 
 def test_total_order_primitives_match_single_window(spark):

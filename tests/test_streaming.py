@@ -596,7 +596,7 @@ def test_streaming_decontaminate_parity(spark, sf_smoke, tmp_path_factory):
 
     # brute-force batch truth: norm-text containment over all pairs
     def norm(col):
-        from isaac_kafka_streaming_spark.extensions.dedup import _tokens
+        from isaac_kafka_streaming_spark.extensions.text import _tokens
 
         return F.concat(
             F.lit(" "), F.concat_ws(" ", _tokens(col)), F.lit(" ")
@@ -2072,7 +2072,7 @@ def test_curation_pipeline_streaming_parity(spark, sf_smoke, tmp_path):
     from pyspark.sql import functions as F
 
     from isaac_kafka_streaming_spark.extensions import multimodal as mm
-    from isaac_kafka_streaming_spark.extensions.dedup import _tokens
+    from isaac_kafka_streaming_spark.extensions.text import _tokens
     from isaac_kafka_streaming_spark.extensions.text import _STOPWORDS, _n_in
     from isaac_kafka_streaming_spark.io import read_table
     from isaac_kafka_streaming_spark.queries import all_queries
@@ -2162,7 +2162,7 @@ def test_warc_curation_pipeline_streaming_parity(spark, sf_smoke, tmp_path):
     from pyspark.sql import functions as F
 
     from isaac_kafka_streaming_spark.extensions import multimodal as mm
-    from isaac_kafka_streaming_spark.extensions.dedup import _tokens
+    from isaac_kafka_streaming_spark.extensions.text import _tokens
     from isaac_kafka_streaming_spark.extensions.text import _STOPWORDS, _n_in
     from isaac_kafka_streaming_spark.io import read_table
     from isaac_kafka_streaming_spark.queries import all_queries

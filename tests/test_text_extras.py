@@ -328,19 +328,6 @@ def test_char_entropy_unicode_parity(spark, tmp_path_factory):
     assert got == want
 
 
-def test_char_entropy_hof_matches_explode_form(spark, sf_smoke):
-    """The zero-shuffle HOF variant must be value-identical to the
-    graded explode+agg form."""
-    from isaac_kafka_streaming_spark.extensions.text import (
-        char_entropy,
-        char_entropy_hof,
-    )
-
-    base = sorted(map(tuple, char_entropy(spark, sf_smoke).collect()))
-    hof = sorted(map(tuple, char_entropy_hof(spark, sf_smoke).collect()))
-    assert base == hof and base
-
-
 def test_bigram_perplexity_values_and_oracle_parity(spark, tmp_path_factory):
     """Pin the smoothed-LM arithmetic on a hand-checkable corpus, the
     repetitive-low / rare-high ordering, and Spark↔DuckDB agreement on
