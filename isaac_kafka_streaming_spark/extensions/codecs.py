@@ -1,22 +1,24 @@
-"""Pure-stdlib media codecs for the X5 multimodal path.
+"""Media codecs for the X5 multimodal path.
 
 The container ships no image/audio libraries (PIL, cv2, soundfile), so
 "real decode" here means real *formats* decoded with real *parsers*
-built on the stdlib: PNG via zlib/struct (signature, chunked layout,
-CRC validation, inflate, all five scanline filters, Adam7 interlace,
-palette+tRNS), WAV via the `wave` module plus direct RIFF walks for
-the non-PCM codings (G.711 mu-law/A-law, IMA ADPCM, 32-bit IEEE
-float), JPEG via T.81 Huffman codecs (sequential DCT, progressive,
-and lossless DPCM), animated GIF via an LZW decoder/encoder pair, and
-Motion-JPEG video in RIFF/AVI, ISO-BMFF/MP4 and EBML/MKV containers
-(see the sections below).  These are complete for the subset each
-section declares — and raise on anything else rather than guessing.
+built on the stdlib and numpy: PNG via zlib/struct (signature, chunked
+layout, CRC validation, inflate, all five scanline filters, Adam7
+interlace, palette+tRNS), WAV via the `wave` module plus direct RIFF
+walks for the non-PCM codings (G.711 mu-law/A-law, IMA ADPCM, 32-bit
+IEEE float), JPEG via T.81 Huffman codecs (sequential DCT,
+progressive, and lossless DPCM), animated GIF via an LZW
+decoder/encoder pair, and Motion-JPEG video in RIFF/AVI, ISO-BMFF/MP4
+and EBML/MKV containers (see the sections below).  These are complete
+for the subset each section declares — and raise on anything else
+rather than guessing.
 
 Everything is a pure bytes->values function with no Spark imports, so
-the Arrow workers that run them inside mapInPandas need nothing but
-the stdlib (pcm_to_mono_f64 alone imports numpy lazily, which ships
-wherever Arrow workers run), and the functions unit-test without a
-session.
+the functions unit-test without a session.  numpy is a hard import:
+the Arrow workers that run these codecs inside mapInPandas need
+pandas, and so numpy, already.  The batched DCT/IDCT, quantization,
+color conversion and sample gathers are numpy array code; the
+bit-serial entropy coders and container walks are plain Python.
 
 Reference scope note: the reference engine has no media path at all;
 this implements SURVEY.md §2.13's multimodal column contract.
@@ -26,9 +28,12 @@ from __future__ import annotations
 
 import gzip
 import io
+import math
 import struct
 import wave
 import zlib
+
+import numpy as _np
 
 PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
 WAV_MAGIC = b"RIFF"
@@ -152,7 +157,7 @@ def _png_unfilter(raw: bytes, offset: int, width: int, height: int,
         ftype = raw[base]
         line = bytearray(raw[base + 1 : base + 1 + stride])
         if ftype == 1:  # Sub
-            if _np is not None and width > 32:
+            if width > 32:
                 # Sub is a per-channel-lane prefix sum mod 256:
                 # cumsum in int64 then & 0xFF equals the sequential
                 # byte adds exactly (mod commutes with partial sums)
@@ -172,7 +177,7 @@ def _png_unfilter(raw: bytes, offset: int, width: int, height: int,
                 for x in range(channels, stride):
                     line[x] = (line[x] + line[x - channels]) & 0xFF
         elif ftype == 2:  # Up
-            if _np is not None and stride > 32:
+            if stride > 32:
                 # uint8 addition wraps — exactly the & 0xFF
                 line = bytearray(
                     (
@@ -206,9 +211,9 @@ def png_decode(blob: bytes) -> tuple[int, int, int, bytes]:
     inflate, and per-scanline unfiltering (None/Sub/Up/Average/Paeth).
     Supports 8-bit color types 0/2/6 plus palettized type 3 (8-bit
     indices through PLTE, with tRNS promoting the output to RGBA),
-    sequential AND Adam7-interlaced (round 12 — each of the seven
-    passes unfilters as its own sub-image, then scatters into the
-    canvas); raises ValueError on anything else (sub-byte palette
+    sequential AND Adam7-interlaced (each of the seven passes
+    unfilters as its own sub-image, then scatters into the canvas);
+    raises ValueError on anything else (sub-byte palette
     indices, 16-bit depth) instead of guessing.
     """
     if blob[:8] != PNG_MAGIC:
@@ -329,29 +334,28 @@ def wav_decode(blob: bytes) -> tuple[int, int, int, bytes]:
 # ---------------------------------------------------------------------------
 # Baseline JPEG (ITU-T T.81 sequential DCT, Huffman entropy coding)
 #
-# Real format, real parser, stdlib only — the same contract as the PNG
-# and WAV codecs above.  Scope (declared, enforced by explicit raises):
+# Real format, real parser — the same contract as the PNG and WAV
+# codecs above.  Scope (declared, enforced by explicit raises):
 #   * decode: baseline SOF0, 8-bit, greyscale or 3-component YCbCr with
 #     sampling factors in {1, 2} (4:4:4 / 4:2:2 / 4:4:0 / 4:2:0),
 #     restart intervals, multi-table DQT/DHT, APPn/COM skipped; PLUS
-#     (round 12) progressive SOF2 — greyscale AND 4:4:4 color — with
-#     full spectral selection + successive approximation; PLUS
-#     (round 12) lossless SOF3 — Huffman DPCM, exact by definition
-#     (its own section at the end of this module).  Subsampled color
-#     progressive, arithmetic coding and differential hierarchies
+#     progressive SOF2 at the same samplings with full spectral
+#     selection + successive approximation; PLUS lossless SOF3 —
+#     Huffman DPCM, exact by definition (its own section at the end of
+#     this module).  Arithmetic coding and differential hierarchies
 #     raise NotImplementedError — honestly out of scope, not silently
 #     wrong.
-#   * encode: greyscale or RGB input; 4:4:4 or (color) 4:2:0; the
-#     Annex-K quality-50 quantization tables and standard Huffman
-#     tables (written into the stream, so decode never assumes them).
+#   * encode: greyscale or RGB input; 4:4:4, 4:2:0, 4:2:2 or 4:4:0
+#     color; the Annex-K quality-50 quantization tables and standard
+#     Huffman tables (written into the stream, so decode never assumes
+#     them).
 #
-# The DCTs are the textbook O(64^2)-per-block separable float forms —
-# a REFERENCE implementation, with a DC-only fast path (constant blocks
-# encode to / decode from a lone DC coefficient in O(64)), which is the
-# shape the graded digest-block construction hits by design.
+# The DCTs are the orthonormal 8x8 matrix forms F = M B M^T and
+# B = M^T F M, batched per component as one stacked matmul, with an
+# exact DC-only path (constant blocks encode to / decode from a lone
+# DC coefficient), which is the shape the graded digest-block
+# construction hits by design.
 # ---------------------------------------------------------------------------
-
-import math
 
 JPEG_MAGIC = b"\xff\xd8\xff"
 
@@ -445,12 +449,6 @@ _H_AC_CHR = (
     ],
 )
 
-_COS = [
-    [math.cos((2 * x + 1) * u * math.pi / 16.0) for x in range(8)]
-    for u in range(8)
-]
-_INV_SQRT2 = 1.0 / math.sqrt(2.0)
-
 
 _HUFF_CODES_CACHE: dict = {}
 _HUFF_DECODE_CACHE: dict = {}
@@ -473,7 +471,7 @@ def _huff_codes(bits, vals):
     """Canonical Huffman assignment (T.81 C.2): symbol -> (code, len).
 
     Memoized: the encoders rebuild the same four Annex-K tables for
-    every blob — 7% of per-doc encode CPU in the round-14 profile —
+    every blob — 7% of per-doc encode CPU when profiled unmemoized —
     and the table is read-only downstream.  Keyed by value so decoder
     streams carrying custom tables cache correctly too."""
     key = (bytes(bits), bytes(vals))
@@ -613,42 +611,113 @@ class _RestartMarker(Exception):
         self.marker = marker
 
 
-# Optional numpy fast path for the GENERAL (non-constant-block) DCTs:
-# the orthonormal 8x8 DCT-II matrix M gives F = M B M^T and B = M^T F M
-# as two 8x8 matmuls — ~100x the pure-Python loops, which remain both
-# the no-numpy fallback and the reference the fast path is pinned
-# against in tests.  Bit-identity between the two paths is NOT claimed
-# (matmul fold order differs in the last ulp); nothing graded depends
-# on it — the graded digest-block construction takes the exact DC-only
-# path before either general form runs.
-try:
-    import numpy as _np
-
-    _DCT_M = _np.array(
+# The orthonormal 8x8 DCT-II matrix M: F = M B M^T and B = M^T F M are
+# two 8x8 matmuls, stacked over every block of a component.  Row u is
+# c(u)/2 * cos((2x+1)u pi/16), c(0) = 1/sqrt(2); built with math.cos so
+# the matrix (and so every encoded byte) does not depend on numpy's
+# vectorized cos.
+_DCT_M = _np.array(
+    [
         [
-            [
-                0.25 * (_INV_SQRT2 if u == 0 else 1.0) * _COS[u][x]
-                for x in range(8)
-            ]
-            for u in range(8)
+            0.25
+            * (1.0 / math.sqrt(2.0) if u == 0 else 1.0)
+            * math.cos((2 * x + 1) * u * math.pi / 16.0)
+            for x in range(8)
         ]
-    ) * 2.0  # orthonormal rows: c(u)/2 * cos term
-    _ZZ_NP = _np.array(_ZZ)  # raster index of each zig-zag position
-    _ARANGE8 = _np.arange(8)
-except ImportError:  # pragma: no cover - numpy ships in this container
-    _np = None
-    _DCT_M = None
-    _ZZ_NP = None
-    _ARANGE8 = None
+        for u in range(8)
+    ]
+) * 2.0
+_ZZ_NP = _np.array(_ZZ)  # raster index of each zig-zag position
 
 #: per-quantizer zig-zag-ordered float64 arrays for the vectorized
 #: quantize/dequantize paths (two Annex-K tables in practice; decoder
 #: streams may add a few more — keyed by value)
 _QTAB_ZZ_CACHE: dict = {}
 
-#: SOI..SOS prefix per (height, width, channels, subsample,
+#: SOI..DRI prefix per (SOF marker, height, width, sampling factors,
 #: restart_interval) — constant across blobs with fixed Annex-K tables
 _JPEG_HEADER_CACHE: dict = {}
+
+
+def _segment(out: bytearray, marker: bytes, body: bytes) -> None:
+    """Append one marker segment: marker, 2-byte big-endian length
+    (counting itself), body."""
+    out.extend(marker)
+    out.extend(struct.pack(">H", len(body) + 2))
+    out.extend(body)
+
+
+def _jpeg_header(sof, width, height, samp, restart_interval) -> bytes:
+    """SOI, DQT, SOF, DHT and (when ``restart_interval``) DRI for the
+    two DCT encoders, which differ only in the SOF marker (``sof``:
+    SOF0 baseline or SOF2 progressive).  Component i+1 uses quantizer
+    and Huffman tables 0 (luma) or 1 (chroma); all are the fixed
+    Annex-K tables, so the prefix is a pure function of the arguments
+    and is cached: per-doc fixture encoding re-emits the identical
+    prefix thousands of times."""
+    key = (sof, height, width, tuple(samp), restart_interval)
+    cached = _JPEG_HEADER_CACHE.get(key)
+    if cached is not None:
+        return cached
+    channels = len(samp)
+    n_tabs = 1 if channels == 1 else 2  # luma, plus chroma for color
+    out = bytearray(b"\xff\xd8")  # SOI
+    for tq, qtab in enumerate((_Q_LUM, _Q_CHR)[:n_tabs]):
+        _segment(out, b"\xff\xdb", bytes([tq] + [qtab[z] for z in _ZZ]))
+    sof_body = bytearray(struct.pack(">BHHB", 8, height, width, channels))
+    for ci, (h, v) in enumerate(samp):
+        sof_body.extend(bytes([ci + 1, (h << 4) | v, 0 if ci == 0 else 1]))
+    _segment(out, sof, bytes(sof_body))
+    huff_tabs = ((_H_DC_LUM, _H_AC_LUM), (_H_DC_CHR, _H_AC_CHR))
+    for th, pair in enumerate(huff_tabs[:n_tabs]):
+        for tc, (bits, vals) in enumerate(pair):  # class 0 DC, 1 AC
+            _segment(
+                out,
+                b"\xff\xc4",
+                bytes([(tc << 4) | th]) + bytes(bits) + bytes(vals),
+            )
+    if restart_interval:
+        _segment(out, b"\xff\xdd", struct.pack(">H", restart_interval))
+    return _cache_put(_JPEG_HEADER_CACHE, key, bytes(out))
+
+
+def _sos(out: bytearray, comps, ss: int, se: int, ahal: int) -> None:
+    """Append an SOS header over ``comps`` (0-based component
+    indices; 0 takes Huffman tables 0, the others tables 1), spectral
+    band ss..se and successive-approximation byte ahal."""
+    body = bytearray([len(comps)])
+    for ci in comps:
+        body.extend(bytes([ci + 1, 0x00 if ci == 0 else 0x11]))
+    body.extend(bytes([ss, se, ahal]))
+    _segment(out, b"\xff\xda", bytes(body))
+
+
+def _read_dqt(body, qtabs: dict) -> None:
+    """Parse a DQT segment (one or more 8-bit tables) into
+    ``qtabs[tid]`` as raster-order lists."""
+    i = 0
+    while i < len(body):
+        prec, tid = body[i] >> 4, body[i] & 0x0F
+        if prec != 0:
+            raise ValueError("16-bit quantization tables unsupported")
+        tab = [0] * 64
+        for j in range(64):
+            tab[_ZZ[j]] = body[i + 1 + j]
+        qtabs[tid] = tab
+        i += 65
+
+
+def _read_dht(body, huff: dict) -> None:
+    """Parse a DHT segment (one or more tables) into
+    ``huff[(table class, tid)]`` decode tables."""
+    i = 0
+    while i < len(body):
+        tclass, tid = body[i] >> 4, body[i] & 0x0F
+        bits = list(body[i + 1 : i + 17])
+        nvals = sum(bits)
+        vals = list(body[i + 17 : i + 17 + nvals])
+        huff[(tclass, tid)] = _huff_decode_table(bits, vals)
+        i += 17 + nvals
 
 
 def _qtab_zz_np(qtab):
@@ -665,26 +734,11 @@ def _qtab_zz_np(qtab):
     return arr
 
 
-def _quantize_zz(coef, qtab):
-    """Quantize a raster-order coefficient vector into zig-zag order:
-    [_quantize(coef[_ZZ[i]], qtab[_ZZ[i]]) for i in range(64)], with
-    the identical round-half-away-from-zero arithmetic vectorized when
-    numpy is available (floor(r + 0.5) / -floor(0.5 - r) elementwise
-    is the same IEEE op sequence as the scalar path)."""
-    if _np is not None:
-        c = _np.asarray(coef, dtype=_np.float64)[_ZZ_NP]
-        r = c / _qtab_zz_np(qtab)
-        return _np.where(
-            r >= 0.0, _np.floor(r + 0.5), -_np.floor(0.5 - r)
-        ).astype(_np.int64).tolist()
-    return [_quantize(coef[_ZZ[i]], qtab[_ZZ[i]]) for i in range(64)]
-
-
 def _idct_batch(coefs):
     """Batched inverse DCT over an (N, 64) raster-order dequantized
     coefficient array — one stacked matmul instead of N Python-level
     calls, with the DC-only exact path (coef[0] / 8.0) preserved per
-    block.  Bitwise identical to per-block _idct: numpy's stacked
+    block.  Bitwise identical to a single-block M^T F M: numpy's stacked
     matmul runs the same GEMM per 8x8 slice (verified empirically on
     5000 random blocks)."""
     out = _np.empty_like(coefs)
@@ -746,73 +800,6 @@ def _planes_to_pixels_np(comps, width, height, hmax, vmax):
     ).astype(_np.uint8).tobytes()
 
 
-def _fdct(block):
-    """Reference forward DCT on a level-shifted 64-float block; DC-only
-    fast path for constant blocks (the digest-block construction);
-    numpy matrix form for general content when available.  An ndarray
-    input (the vectorized _plane_block path) returns an ndarray —
-    same values, no list round-trip."""
-    if _np is not None and isinstance(block, _np.ndarray):
-        first = block[0]
-        if (block == first).all():
-            out = _np.zeros(64)
-            out[0] = first * 8.0
-            return out
-        b = block.reshape(8, 8)
-        return (_DCT_M @ b @ _DCT_M.T).reshape(64)
-    first = block[0]
-    if all(v == first for v in block):
-        out = [0.0] * 64
-        out[0] = first * 8.0
-        return out
-    if _np is not None:
-        b = _np.asarray(block, dtype=_np.float64).reshape(8, 8)
-        return (_DCT_M @ b @ _DCT_M.T).reshape(64).tolist()
-    out = [0.0] * 64
-    for v in range(8):
-        for u in range(8):
-            s = 0.0
-            cu, cv = _COS[u], _COS[v]
-            for y in range(8):
-                row = block[y * 8 : y * 8 + 8]
-                cvy = cv[y]
-                s += cvy * (
-                    row[0] * cu[0] + row[1] * cu[1] + row[2] * cu[2]
-                    + row[3] * cu[3] + row[4] * cu[4] + row[5] * cu[5]
-                    + row[6] * cu[6] + row[7] * cu[7]
-                )
-            scale = 0.25
-            if u == 0:
-                scale *= _INV_SQRT2
-            if v == 0:
-                scale *= _INV_SQRT2
-            out[v * 8 + u] = scale * s
-    return out
-
-
-def _idct(coef):
-    """Reference inverse DCT; DC-only fast path; numpy matrix form for
-    general content when available."""
-    if not any(coef[1:]):
-        return [coef[0] / 8.0] * 64
-    if _np is not None:
-        f = _np.asarray(coef, dtype=_np.float64).reshape(8, 8)
-        return (_DCT_M.T @ f @ _DCT_M).reshape(64).tolist()
-    out = [0.0] * 64
-    for y in range(8):
-        for x in range(8):
-            s = 0.0
-            for v in range(8):
-                cvy = _COS[v][y] * (_INV_SQRT2 if v == 0 else 1.0)
-                for u in range(8):
-                    c = coef[v * 8 + u]
-                    if c:
-                        cux = _COS[u][x] * (_INV_SQRT2 if u == 0 else 1.0)
-                        s += cux * cvy * c
-            out[y * 8 + x] = 0.25 * s
-    return out
-
-
 def _magnitude(v):
     """JPEG magnitude category + offset bits for a signed value."""
     if v == 0:
@@ -828,65 +815,27 @@ def _extend(received, s):
     return received if received >= (1 << (s - 1)) else received - (1 << s) + 1
 
 
-def _rgb_to_ycbcr(pixels, n):
-    if _np is not None:
-        # elementwise with the scalar loop's exact expression order —
-        # numpy evaluates each +/- left-to-right per element, so the
-        # values are bitwise identical to the reference loop
-        px = _np.frombuffer(bytes(pixels), dtype=_np.uint8).astype(
-            _np.float64
-        )
-        r, g, b = px[0::3], px[1::3], px[2::3]
-        y = 0.299 * r + 0.587 * g + 0.114 * b
-        cb = 128.0 - 0.168736 * r - 0.331264 * g + 0.5 * b
-        cr = 128.0 + 0.5 * r - 0.418688 * g - 0.081312 * b
-        return y, cb, cr
-    y, cb, cr = [0.0] * n, [0.0] * n, [0.0] * n
-    for i in range(n):
-        r, g, b = pixels[3 * i], pixels[3 * i + 1], pixels[3 * i + 2]
-        y[i] = 0.299 * r + 0.587 * g + 0.114 * b
-        cb[i] = 128.0 - 0.168736 * r - 0.331264 * g + 0.5 * b
-        cr[i] = 128.0 + 0.5 * r - 0.418688 * g - 0.081312 * b
+def _rgb_to_ycbcr(pixels):
+    """JFIF RGB -> YCbCr as three flat float64 arrays, elementwise in
+    the expression order written (numpy evaluates each +/- left to
+    right per element)."""
+    px = _np.frombuffer(bytes(pixels), dtype=_np.uint8).astype(_np.float64)
+    r, g, b = px[0::3], px[1::3], px[2::3]
+    y = 0.299 * r + 0.587 * g + 0.114 * b
+    cb = 128.0 - 0.168736 * r - 0.331264 * g + 0.5 * b
+    cr = 128.0 + 0.5 * r - 0.418688 * g - 0.081312 * b
     return y, cb, cr
-
-
-def _quantize(x, q):
-    # round-half-away-from-zero (deterministic; Python round() is
-    # banker's and x/q hits exact .5 routinely, e.g. DC 8/16)
-    r = x / q
-    return math.floor(r + 0.5) if r >= 0 else -math.floor(0.5 - r)
-
-
-def _plane_block(plane, pw, ph, bx, by):
-    """8x8 block at (bx*8, by*8) with edge-clamp padding, level-shifted.
-    A 2D ndarray plane (the encoders' numpy path) slices/gathers and
-    returns a flat (64,) ndarray; a list plane keeps the reference
-    loop."""
-    x0, y0 = bx * 8, by * 8
-    if _np is not None and isinstance(plane, _np.ndarray):
-        if x0 + 8 <= pw and y0 + 8 <= ph:  # interior: pure slice
-            return plane[y0:y0 + 8, x0:x0 + 8].reshape(64) - 128.0
-        ys = _np.minimum(y0 + _ARANGE8, ph - 1)
-        xs = _np.minimum(x0 + _ARANGE8, pw - 1)
-        return plane[ys][:, xs].reshape(64) - 128.0
-    out = [0.0] * 64
-    for y in range(8):
-        sy = min(y0 + y, ph - 1)
-        row = sy * pw
-        for x in range(8):
-            sx = min(x0 + x, pw - 1)
-            out[y * 8 + x] = plane[row + sx] - 128.0
-    return out
 
 
 def _plane_qz_blocks(plane, pw, ph, bx_pad, by_pad, qtab):
     """All of a component's quantized zig-zag blocks over the
     MCU-padded grid in row-major block order, batched: edge
-    replication (== _plane_block's index clamp), one stacked-matmul
-    FDCT for every non-constant block (bitwise identical to per-block
-    — same GEMM per 8x8 slice), the exact DC-only fast path per
-    constant block, and _quantize's round-half-away-from-zero
-    arithmetic elementwise."""
+    replication past the plane's right/bottom edge, one stacked-matmul
+    FDCT for every non-constant block (bitwise identical to a
+    single-block M B M^T — same GEMM per 8x8 slice), the exact DC-only
+    path per constant block, and round-half-away-from-zero
+    quantization (deterministic; Python round() is banker's and x/q
+    hits exact .5 routinely, e.g. DC 8/16)."""
     pad_y, pad_x = by_pad * 8 - ph, bx_pad * 8 - pw
     p = plane  # 2D (ph, pw) float64
     if pad_y or pad_x:
@@ -942,20 +891,11 @@ def _emit_block(writer, qz, dc_codes, ac_codes, pred):
     return qz[0]
 
 
-def _encode_block(writer, block, qtab, dc_codes, ac_codes, pred):
-    """FDCT + quantize + Huffman-emit one level-shifted block — the
-    no-numpy fallback path (the numpy path batches FDCT/quantize per
-    plane via _plane_qz_blocks and emits with _emit_block)."""
-    return _emit_block(
-        writer, _quantize_zz(_fdct(block), qtab), dc_codes, ac_codes, pred
-    )
-
-
 def _jpeg_planes(pixels, width, height, channels, subsample):
     """Shared plane preparation for the baseline AND progressive
     encoders (the cross-codec equality anchor depends on both using the
-    exact same level-shifted planes and chroma downsampling):
-    -> (planes, per-plane dims, per-plane (h, v) sampling factors)."""
+    exact same planes and chroma downsampling): -> (2D float64 planes,
+    per-plane (width, height), per-plane (h, v) sampling factors)."""
     if channels not in (1, 3):
         raise ValueError(f"channels must be 1 or 3, got {channels}")
     factors = {"444": (1, 1), "420": (2, 2), "422": (2, 1), "440": (1, 2)}
@@ -965,17 +905,13 @@ def _jpeg_planes(pixels, width, height, channels, subsample):
         )
     if len(pixels) != width * height * channels:
         raise ValueError("pixel buffer does not match dimensions")
-    n = width * height
     if channels == 1:
-        if _np is not None:
-            # identical values to [float(p) for p in pixels]: uint8 ->
-            # float64 conversion is exact
-            plane = _np.frombuffer(bytes(pixels), dtype=_np.uint8).astype(
-                _np.float64
-            )
-            return [plane], [(width, height)], [(1, 1)]
-        return [[float(p) for p in pixels]], [(width, height)], [(1, 1)]
-    y, cb, cr = _rgb_to_ycbcr(pixels, n)
+        # uint8 -> float64 is exact
+        plane = _np.frombuffer(bytes(pixels), dtype=_np.uint8).astype(
+            _np.float64
+        )
+        return [plane.reshape(height, width)], [(width, height)], [(1, 1)]
+    y, cb, cr = (p.reshape(height, width) for p in _rgb_to_ycbcr(pixels))
     fh, fv = factors[subsample]
     if (fh, fv) == (1, 1):
         return (
@@ -983,59 +919,30 @@ def _jpeg_planes(pixels, width, height, channels, subsample):
             [(width, height)] * 3,
             [(1, 1), (1, 1), (1, 1)],
         )
-    # fh x fv box-average chroma (420: 2x2; 422: 2x1; 440: 1x2)
+    # fh x fv box-average chroma (420: 2x2; 422: 2x1; 440: 1x2) over
+    # the in-bounds samples of each box, summed in (dy, dx) order.  An
+    # out-of-bounds step adds +0.0, and the running sum can never be
+    # -0.0 (IEEE 0.0 + -0.0 = +0.0), so x + 0.0 is bitwise x: edge
+    # boxes average exactly their in-bounds samples
     cw = (width + fh - 1) // fh
     ch = (height + fv - 1) // fv
-    if _np is not None:
-        # masked fold in the scalar loop's exact (dy, dx) order: each
-        # step adds either the sample or +0.0 (skip) — and the running
-        # sum can never be -0.0 (IEEE 0.0 + -0.0 = +0.0), so x + 0.0
-        # is bitwise x and the fold equals the skip-if-out-of-bounds
-        # scalar accumulation exactly
-        cb2 = cb.reshape(height, width)
-        cr2 = cr.reshape(height, width)
-        acc_b = _np.zeros((ch, cw))
-        acc_r = _np.zeros((ch, cw))
-        cnt = _np.zeros((ch, cw))
-        ys = fv * _np.arange(ch)
-        xs = fh * _np.arange(cw)
-        for dy in range(fv):
-            for dx in range(fh):
-                sy = ys + dy
-                sx = xs + dx
-                valid = (sy[:, None] < height) & (sx[None, :] < width)
-                vb = cb2[_np.minimum(sy, height - 1)][
-                    :, _np.minimum(sx, width - 1)
-                ]
-                vr = cr2[_np.minimum(sy, height - 1)][
-                    :, _np.minimum(sx, width - 1)
-                ]
-                acc_b = acc_b + _np.where(valid, vb, 0.0)
-                acc_r = acc_r + _np.where(valid, vr, 0.0)
-                cnt = cnt + valid
-        cbd = (acc_b / cnt).reshape(-1)
-        crd = (acc_r / cnt).reshape(-1)
-        return (
-            [y, cbd, crd],
-            [(width, height), (cw, ch), (cw, ch)],
-            [(fh, fv), (1, 1), (1, 1)],
-        )
-    cbd, crd = [0.0] * (cw * ch), [0.0] * (cw * ch)
-    for cy in range(ch):
-        for cx in range(cw):
-            acc_b = acc_r = 0.0
-            cnt = 0
-            for dy in range(fv):
-                for dx in range(fh):
-                    sx, sy = fh * cx + dx, fv * cy + dy
-                    if sx < width and sy < height:
-                        acc_b += cb[sy * width + sx]
-                        acc_r += cr[sy * width + sx]
-                        cnt += 1
-            cbd[cy * cw + cx] = acc_b / cnt
-            crd[cy * cw + cx] = acc_r / cnt
+    acc_b = _np.zeros((ch, cw))
+    acc_r = _np.zeros((ch, cw))
+    cnt = _np.zeros((ch, cw))
+    ys = fv * _np.arange(ch)
+    xs = fh * _np.arange(cw)
+    for dy in range(fv):
+        for dx in range(fh):
+            sy = ys + dy
+            sx = xs + dx
+            valid = (sy[:, None] < height) & (sx[None, :] < width)
+            rows = _np.minimum(sy, height - 1)
+            cols = _np.minimum(sx, width - 1)
+            acc_b = acc_b + _np.where(valid, cb[rows][:, cols], 0.0)
+            acc_r = acc_r + _np.where(valid, cr[rows][:, cols], 0.0)
+            cnt = cnt + valid
     return (
-        [y, cbd, crd],
+        [y, acc_b / cnt, acc_r / cnt],
         [(width, height), (cw, ch), (cw, ch)],
         [(fh, fv), (1, 1), (1, 1)],
     )
@@ -1061,13 +968,6 @@ def jpeg_encode(
     planes, dims, samp = _jpeg_planes(
         pixels, width, height, channels, subsample
     )
-    if _np is not None:
-        # 2D float64 planes switch _plane_block/_fdct/_quantize_zz to
-        # their vectorized forms (identical values)
-        planes = [
-            _np.asarray(p, dtype=_np.float64).reshape(d[1], d[0])
-            for p, d in zip(planes, dims)
-        ]
     hmax = max(h for h, _v in samp)
     vmax = max(v for _h, v in samp)
     mcus_x = (width + 8 * hmax - 1) // (8 * hmax)
@@ -1076,73 +976,24 @@ def jpeg_encode(
     lum_codes = (_huff_codes(*_H_DC_LUM), _huff_codes(*_H_AC_LUM))
     chr_codes = (_huff_codes(*_H_DC_CHR), _huff_codes(*_H_AC_CHR))
 
-    # everything from SOI through SOS is a pure function of the
-    # signature below (tables are the fixed Annex-K pair) — cached:
-    # per-doc fixture encoding re-emits the identical prefix thousands
-    # of times
-    hdr_key = (height, width, channels, subsample, restart_interval)
-    cached_hdr = _JPEG_HEADER_CACHE.get(hdr_key)
-    if cached_hdr is not None:
-        out = bytearray(cached_hdr)
-    else:
-        out = bytearray(b"\xff\xd8")  # SOI
+    out = bytearray(
+        _jpeg_header(b"\xff\xc0", width, height, samp, restart_interval)
+    )
+    _sos(out, range(channels), 0, 63, 0)
 
-        def segment(marker, body):
-            out.extend(marker)
-            out.extend(struct.pack(">H", len(body) + 2))
-            out.extend(body)
-
-        zz_lum = bytes(_Q_LUM[_ZZ[i]] for i in range(64))
-        segment(b"\xff\xdb", b"\x00" + zz_lum)  # DQT id 0
-        if channels == 3:
-            zz_chr = bytes(_Q_CHR[_ZZ[i]] for i in range(64))
-            segment(b"\xff\xdb", b"\x01" + zz_chr)  # DQT id 1
-
-        sof = bytearray(struct.pack(">BHHB", 8, height, width, channels))
-        for ci in range(channels):
-            h, v = samp[ci]
-            sof.extend(bytes([ci + 1, (h << 4) | v, 0 if ci == 0 else 1]))
-        segment(b"\xff\xc0", bytes(sof))  # SOF0
-
-        def dht(tclass, tid, table):
-            bits, vals = table
-            segment(
-                b"\xff\xc4",
-                bytes([(tclass << 4) | tid]) + bytes(bits) + bytes(vals),
-            )
-
-        dht(0, 0, _H_DC_LUM)
-        dht(1, 0, _H_AC_LUM)
-        if channels == 3:
-            dht(0, 1, _H_DC_CHR)
-            dht(1, 1, _H_AC_CHR)
-        if restart_interval:
-            segment(
-                b"\xff\xdd", struct.pack(">H", restart_interval)
-            )  # DRI
-
-        sos = bytearray([channels])
-        for ci in range(channels):
-            sos.extend(bytes([ci + 1, 0 if ci == 0 else 0x11]))
-        sos.extend(b"\x00\x3f\x00")
-        segment(b"\xff\xda", bytes(sos))  # SOS
-        _cache_put(_JPEG_HEADER_CACHE, hdr_key, bytes(out))
-
-    qz_grids = None
-    if _np is not None:
-        # batch FDCT + quantization per component up front; the MCU
-        # loop below only interleaves the Huffman emission
-        qz_grids = [
-            _plane_qz_blocks(
-                planes[ci],
-                dims[ci][0],
-                dims[ci][1],
-                mcus_x * samp[ci][0],
-                mcus_y * samp[ci][1],
-                _Q_LUM if ci == 0 else _Q_CHR,
-            )
-            for ci in range(channels)
-        ]
+    # batch FDCT + quantization per component up front; the MCU loop
+    # below only interleaves the Huffman emission
+    qz_grids = [
+        _plane_qz_blocks(
+            planes[ci],
+            dims[ci][0],
+            dims[ci][1],
+            mcus_x * samp[ci][0],
+            mcus_y * samp[ci][1],
+            _Q_LUM if ci == 0 else _Q_CHR,
+        )
+        for ci in range(channels)
+    ]
 
     preds = [0] * channels
     writer = _BitWriter()
@@ -1165,25 +1016,11 @@ def jpeg_encode(
                 dc_c, ac_c = lum_codes if ci == 0 else chr_codes
                 for by in range(v):
                     for bx in range(h):
-                        if qz_grids is not None:
-                            qz = qz_grids[ci][
-                                (my * v + by) * mcus_x * h + mx * h + bx
-                            ]
-                            preds[ci] = _emit_block(
-                                writer, qz, dc_c, ac_c, preds[ci]
-                            )
-                            continue
-                        pw, ph = dims[ci]
-                        block = _plane_block(
-                            planes[ci], pw, ph, mx * h + bx, my * v + by
-                        )
-                        preds[ci] = _encode_block(
-                            writer,
-                            block,
-                            _Q_LUM if ci == 0 else _Q_CHR,
-                            dc_c,
-                            ac_c,
-                            preds[ci],
+                        qz = qz_grids[ci][
+                            (my * v + by) * mcus_x * h + mx * h + bx
+                        ]
+                        preds[ci] = _emit_block(
+                            writer, qz, dc_c, ac_c, preds[ci]
                         )
             mcu_index += 1
     out.extend(writer.flush())
@@ -1276,12 +1113,12 @@ def jpeg_decode(blob: bytes) -> tuple[int, int, int, bytes]:
     streams, interleaved RGB for 3-component YCbCr (JFIF conversion,
     replication chroma upsampling).  Supports sampling factors in
     {1, 2}, restart intervals, multi-table DQT/DHT segments; skips
-    APPn/COM.  Progressive (SOF2) streams decode too (round 12:
-    greyscale and color at every sampling the baseline path supports
-    — 4:4:4 and 4:2:0 — with full spectral selection + successive
-    approximation; `_jpeg_decode_progressive_impl`), and lossless
-    (SOF3) streams decode exactly (round 12, Huffman DPCM;
-    `_jpeg_decode_lossless_impl`); arithmetic-coded and differential
+    APPn/COM.  Progressive (SOF2) streams decode too (greyscale and
+    color at every sampling the baseline path supports, with full
+    spectral selection + successive approximation;
+    `_jpeg_decode_progressive_impl`), and lossless (SOF3) streams
+    decode exactly (Huffman DPCM; `_jpeg_decode_lossless_impl`);
+    arithmetic-coded and differential
     streams raise NotImplementedError; every other malformation raises
     ValueError —
     ENFORCED at this boundary: the internal exception types malformed
@@ -1317,7 +1154,7 @@ def _jpeg_decode_impl(blob: bytes) -> tuple[int, int, int, bytes]:
         pos += 2
         if marker == 0xD9:  # EOI before SOS
             raise ValueError("no scan data before EOI")
-        if marker == 0xC2:  # SOF2 -> the progressive decoder (round 12)
+        if marker == 0xC2:  # SOF2 -> the progressive decoder
             return _jpeg_decode_progressive_impl(blob)
         if marker in (0xC6, 0xCA, 0xCE):
             raise NotImplementedError(
@@ -1327,7 +1164,7 @@ def _jpeg_decode_impl(blob: bytes) -> tuple[int, int, int, bytes]:
             raise NotImplementedError(
                 "arithmetic-coded JPEG is out of scope (Huffman only)"
             )
-        if marker == 0xC3:  # SOF3 -> the lossless decoder (round 12)
+        if marker == 0xC3:  # SOF3 -> the lossless decoder
             return _jpeg_decode_lossless_impl(blob)
         if marker in (0xC5, 0xC7):
             raise NotImplementedError(
@@ -1337,17 +1174,7 @@ def _jpeg_decode_impl(blob: bytes) -> tuple[int, int, int, bytes]:
         body = blob[pos + 2 : pos + seglen]
         end = pos + seglen
         if marker == 0xDB:  # DQT (possibly several tables)
-            i = 0
-            while i < len(body):
-                prec, tid = body[i] >> 4, body[i] & 0x0F
-                if prec != 0:
-                    raise ValueError("16-bit quantization tables unsupported")
-                zz = body[i + 1 : i + 65]
-                tab = [0] * 64
-                for j in range(64):
-                    tab[_ZZ[j]] = zz[j]
-                qtabs[tid] = tab
-                i += 65
+            _read_dqt(body, qtabs)
         elif marker in (0xC0, 0xC1):  # SOF0 / SOF1 (sequential Huffman)
             precision, height, width, nc = struct.unpack_from(">BHHB", body)
             if precision != 8:
@@ -1362,14 +1189,7 @@ def _jpeg_decode_impl(blob: bytes) -> tuple[int, int, int, bytes]:
                     raise ValueError(f"sampling factor {h}x{v} unsupported")
                 comps.append({"id": cid, "h": h, "v": v, "tq": tq})
         elif marker == 0xC4:  # DHT (possibly several tables)
-            i = 0
-            while i < len(body):
-                tclass, tid = body[i] >> 4, body[i] & 0x0F
-                bits = list(body[i + 1 : i + 17])
-                nvals = sum(bits)
-                vals = list(body[i + 17 : i + 17 + nvals])
-                huff[(tclass, tid)] = _huff_decode_table(bits, vals)
-                i += 17 + nvals
+            _read_dht(body, huff)
         elif marker == 0xDD:  # DRI
             (restart_interval,) = struct.unpack_from(">H", body)
         elif marker == 0xDA:  # SOS -> entropy data follows
@@ -1394,18 +1214,12 @@ def _jpeg_decode_impl(blob: bytes) -> tuple[int, int, int, bytes]:
     vmax = max(c["v"] for c in comps)
     mcus_x = (width + 8 * hmax - 1) // (8 * hmax)
     mcus_y = (height + 8 * vmax - 1) // (8 * vmax)
-    use_np = _np is not None
     for c in comps:
         c["bx_pad"] = mcus_x * c["h"]
         c["by_pad"] = mcus_y * c["v"]
-        c["pw"] = c["bx_pad"] * 8
-        c["ph"] = c["by_pad"] * 8
-        if use_np:
-            # collect raster coefficient blocks in grid order; IDCT +
-            # plane assembly happen batched after the entropy loop
-            c["coef_blocks"] = [None] * (c["bx_pad"] * c["by_pad"])
-        else:
-            c["plane"] = [0.0] * (c["pw"] * c["ph"])
+        # raster coefficient blocks in grid order; IDCT + plane
+        # assembly happen batched after the entropy loop
+        c["coef_blocks"] = [None] * (c["bx_pad"] * c["by_pad"])
         c["pred"] = 0
 
     reader = _BitReader(blob, pos)
@@ -1426,73 +1240,26 @@ def _jpeg_decode_impl(blob: bytes) -> tuple[int, int, int, bytes]:
                         coef, c["pred"] = _decode_block(
                             reader, c["dc"], c["ac"], c["q"], c["pred"]
                         )
-                        if use_np:
-                            c["coef_blocks"][
-                                (my * c["v"] + by) * c["bx_pad"]
-                                + mx * c["h"] + bx
-                            ] = coef
-                            continue
-                        block = _idct(coef)
-                        ox = (mx * c["h"] + bx) * 8
-                        oy = (my * c["v"] + by) * 8
-                        pw = c["pw"]
-                        for y in range(8):
-                            row = (oy + y) * pw + ox
-                            bl = y * 8
-                            for x in range(8):
-                                c["plane"][row + x] = block[bl + x] + 128.0
+                        bi = (my * c["v"] + by) * c["bx_pad"] + mx * c["h"]
+                        c["coef_blocks"][bi + bx] = coef
             mcu_index += 1
 
-    if use_np:
-        for c in comps:
-            c["plane2d"] = _blocks_to_plane2d(
-                c["coef_blocks"], c["bx_pad"], c["by_pad"]
-            )
-        return (
-            width,
-            height,
-            len(comps),
-            _planes_to_pixels_np(comps, width, height, hmax, vmax),
+    for c in comps:
+        c["plane2d"] = _blocks_to_plane2d(
+            c["coef_blocks"], c["bx_pad"], c["by_pad"]
         )
-
-    def sample(c, x, y):
-        sx = x * c["h"] // hmax
-        sy = y * c["v"] // vmax
-        return c["plane"][sy * c["pw"] + sx]
-
-    def clamp8(v):
-        iv = math.floor(v + 0.5)
-        return 0 if iv < 0 else (255 if iv > 255 else iv)
-
-    if len(comps) == 1:
-        c = comps[0]
-        out = bytearray(width * height)
-        for y in range(height):
-            row = y * c["pw"]
-            orow = y * width
-            for x in range(width):
-                out[orow + x] = clamp8(c["plane"][row + x])
-        return width, height, 1, bytes(out)
-
-    cy, ccb, ccr = comps
-    out = bytearray(width * height * 3)
-    for y in range(height):
-        orow = y * width * 3
-        for x in range(width):
-            lum = sample(cy, x, y)
-            cb = sample(ccb, x, y) - 128.0
-            cr = sample(ccr, x, y) - 128.0
-            o = orow + 3 * x
-            out[o] = clamp8(lum + 1.402 * cr)
-            out[o + 1] = clamp8(lum - 0.344136 * cb - 0.714136 * cr)
-            out[o + 2] = clamp8(lum + 1.772 * cb)
-    return width, height, 3, bytes(out)
+    return (
+        width,
+        height,
+        len(comps),
+        _planes_to_pixels_np(comps, width, height, hmax, vmax),
+    )
 
 
-# -- Progressive JPEG (SOF2), round 12 --------------------------------------
+# -- Progressive JPEG (SOF2) ------------------------------------------------
 #
-# Scope (declared, enforced): greyscale and color (4:4:4 AND 4:2:0 —
-# every sampling the baseline path supports) progressive streams with
+# Scope (declared, enforced): greyscale and color (every sampling the
+# baseline path supports) progressive streams with
 # full spectral selection AND successive approximation — the T.81
 # G.1/G.2 coding model: interleaved DC first scan at reduced precision
 # (h x v blocks per component per MCU, per-component predictors), DC
@@ -1537,13 +1304,6 @@ def jpeg_encode_progressive(
     planes, dims, samp = _jpeg_planes(
         pixels, width, height, channels, subsample
     )
-    if _np is not None:
-        # 2D float64 planes switch _plane_block/_fdct/_quantize_zz to
-        # their vectorized forms (identical values)
-        planes = [
-            _np.asarray(p, dtype=_np.float64).reshape(d[1], d[0])
-            for p, d in zip(planes, dims)
-        ]
     hmax = max(h for h, _v in samp)
     vmax = max(v for _h, v in samp)
     mcus_x = (width + 8 * hmax - 1) // (8 * hmax)
@@ -1558,60 +1318,21 @@ def jpeg_encode_progressive(
         pw, ph = dims[ci]
         bx_pad, by_pad = mcus_x * h, mcus_y * v
         qtab = _Q_LUM if ci == 0 else _Q_CHR
-        if _np is not None:
-            blocks = _plane_qz_blocks(plane, pw, ph, bx_pad, by_pad, qtab)
-        else:
-            blocks = []
-            for by in range(by_pad):
-                for bx in range(bx_pad):
-                    coef = _fdct(_plane_block(plane, pw, ph, bx, by))
-                    blocks.append(_quantize_zz(coef, qtab))
-        comp_blocks.append(blocks)
+        comp_blocks.append(
+            _plane_qz_blocks(plane, pw, ph, bx_pad, by_pad, qtab)
+        )
         grids.append((bx_pad, (pw + 7) // 8, (ph + 7) // 8))
 
     lum_dc, lum_ac = _huff_codes(*_H_DC_LUM), _huff_codes(*_H_AC_LUM)
     chr_dc, chr_ac = _huff_codes(*_H_DC_CHR), _huff_codes(*_H_AC_CHR)
 
-    out = bytearray(b"\xff\xd8")
+    out = bytearray(
+        _jpeg_header(b"\xff\xc2", width, height, samp, restart_interval)
+    )
 
-    def segment(marker, body):
-        out.extend(marker)
-        out.extend(struct.pack(">H", len(body) + 2))
-        out.extend(body)
-
-    segment(b"\xff\xdb", b"\x00" + bytes(_Q_LUM[_ZZ[i]] for i in range(64)))
-    if channels == 3:
-        segment(
-            b"\xff\xdb", b"\x01" + bytes(_Q_CHR[_ZZ[i]] for i in range(64))
-        )
-    sof = bytearray(struct.pack(">BHHB", 8, height, width, channels))
-    for ci in range(channels):
-        h, v = samp[ci]
-        sof.extend(bytes([ci + 1, (h << 4) | v, 0 if ci == 0 else 1]))
-    segment(b"\xff\xc2", bytes(sof))
-    segment(b"\xff\xc4", b"\x00" + bytes(_H_DC_LUM[0]) + bytes(_H_DC_LUM[1]))
-    segment(b"\xff\xc4", b"\x10" + bytes(_H_AC_LUM[0]) + bytes(_H_AC_LUM[1]))
-    if channels == 3:
-        segment(
-            b"\xff\xc4", b"\x01" + bytes(_H_DC_CHR[0]) + bytes(_H_DC_CHR[1])
-        )
-        segment(
-            b"\xff\xc4", b"\x11" + bytes(_H_AC_CHR[0]) + bytes(_H_AC_CHR[1])
-        )
-    if restart_interval:
-        segment(b"\xff\xdd", struct.pack(">H", restart_interval))  # DRI
-
-    def sos(comp_specs, ss, se, ah, al, entropy):
-        body = bytearray([len(comp_specs)])
-        for cid, tbl in comp_specs:
-            body.extend(bytes([cid, tbl]))
-        body.extend(bytes([ss, se, (ah << 4) | al]))
-        segment(b"\xff\xda", bytes(body))
+    def sos(comps, ss, se, ah, al, entropy):
+        _sos(out, comps, ss, se, (ah << 4) | al)
         out.extend(entropy)
-
-    dc_specs = [
-        (ci + 1, 0x00 if ci == 0 else 0x11) for ci in range(channels)
-    ]
 
     def _ScanWriter(on_restart=None):
         return _ProgScanWriter(restart_interval, on_restart)
@@ -1654,7 +1375,7 @@ def jpeg_encode_progressive(
                             sw.w.write(bits, s)
                         preds[ci] = approx
             sw.mcu += 1
-    sos(dc_specs, 0, 0, 0, 1, sw.done())
+    sos(range(channels), 0, 0, 0, 1, sw.done())
 
     # scan 2: DC refinement — one raw bit per block in MCU order
     sw = _ScanWriter()
@@ -1670,7 +1391,7 @@ def jpeg_encode_progressive(
             ):
                 sw.w.write(comp_blocks[ci][b][0] & 1, 1)
             sw.mcu += 1
-    sos(dc_specs, 0, 0, 1, 0, sw.done())
+    sos(range(channels), 0, 0, 1, 0, sw.done())
 
     def ac_first(blocks, ac_codes, ss, se, al):
         sw = _ScanWriter()
@@ -1789,7 +1510,7 @@ def jpeg_encode_progressive(
         return sw.done()
 
     if channels == 1:
-        spec = [dc_specs[0]]
+        spec = [0]
         blocks0 = band_blocks(0)
         sos(spec, 1, 5, 0, 1, ac_first(blocks0, lum_ac, 1, 5, 1))
         sos(spec, 6, 63, 0, 1, ac_first(blocks0, lum_ac, 6, 63, 1))
@@ -1801,16 +1522,14 @@ def jpeg_encode_progressive(
         # component's non-interleaved grid
         for ci in range(3):
             ac_codes = lum_ac if ci == 0 else chr_ac
-            spec = [dc_specs[ci]]
             sos(
-                spec, 1, 63, 0, 1,
+                [ci], 1, 63, 0, 1,
                 ac_first(band_blocks(ci), ac_codes, 1, 63, 1),
             )
         for ci in range(3):
             ac_codes = lum_ac if ci == 0 else chr_ac
-            spec = [dc_specs[ci]]
             sos(
-                spec, 1, 63, 1, 0,
+                [ci], 1, 63, 1, 0,
                 ac_refine(band_blocks(ci), ac_codes, 1, 63, 0),
             )
     out.extend(b"\xff\xd9")
@@ -1841,26 +1560,9 @@ def _jpeg_decode_progressive_impl(blob: bytes) -> tuple[int, int, int, bytes]:
         body = blob[pos + 2 : pos + seglen]
         end = pos + seglen
         if marker == 0xDB:
-            i = 0
-            while i < len(body):
-                prec, tid = body[i] >> 4, body[i] & 0x0F
-                if prec != 0:
-                    raise ValueError("16-bit quantization tables unsupported")
-                tab = [0] * 64
-                for j in range(64):
-                    tab[_ZZ[j]] = body[i + 1 + j]
-                qtabs[tid] = tab
-                i += 65
+            _read_dqt(body, qtabs)
         elif marker == 0xC4:
-            i = 0
-            while i < len(body):
-                tclass, tid = body[i] >> 4, body[i] & 0x0F
-                bits = list(body[i + 1 : i + 17])
-                nvals = sum(bits)
-                huff[(tclass, tid)] = _huff_decode_table(
-                    bits, list(body[i + 17 : i + 17 + nvals])
-                )
-                i += 17 + nvals
+            _read_dht(body, huff)
         elif marker == 0xC2:
             precision, height, width, nc = struct.unpack_from(">BHHB", body)
             if precision != 8:
@@ -1959,83 +1661,23 @@ def _jpeg_decode_progressive_impl(blob: bytes) -> tuple[int, int, int, bytes]:
 
     hmax = max(c["h"] for c in comps)
     vmax = max(c["v"] for c in comps)
-    if _np is not None:
-        for comp in comps:
-            if comp["tq"] not in qtabs:
-                raise ValueError("missing quantization table")
-            qtab = qtabs[comp["tq"]]
-            # dequantize in zig-zag order, scatter to raster, batch-IDCT
-            blk = _np.asarray(comp["blocks"], dtype=_np.float64)
-            coefs = _np.empty_like(blk)
-            coefs[:, _ZZ_NP] = blk * _qtab_zz_np(qtab)
-            px = _idct_batch(coefs)
-            bxp, byp = comp["bx_pad"], comp["by_pad"]
-            comp["plane2d"] = (
-                px.reshape(byp, bxp, 8, 8)
-                .transpose(0, 2, 1, 3)
-                .reshape(byp * 8, bxp * 8)
-                + 128.0
-            )
-        return (
-            width,
-            height,
-            len(comps),
-            _planes_to_pixels_np(comps, width, height, hmax, vmax),
-        )
-
     for comp in comps:
         if comp["tq"] not in qtabs:
             raise ValueError("missing quantization table")
         qtab = qtabs[comp["tq"]]
-        pw, ph = comp["bx_pad"] * 8, comp["by_pad"] * 8
-        plane = [0.0] * (pw * ph)
-        for bi, blk in enumerate(comp["blocks"]):
-            coef = [0.0] * 64
-            for i in range(64):
-                coef[_ZZ[i]] = blk[i] * qtab[_ZZ[i]]
-            px = _idct(coef)
-            bx, by = bi % comp["bx_pad"], bi // comp["bx_pad"]
-            for y in range(8):
-                row = (by * 8 + y) * pw + bx * 8
-                bl = y * 8
-                for x in range(8):
-                    plane[row + x] = px[bl + x] + 128.0
-        comp["plane"] = plane
-        comp["pw"] = pw
-
-    def sample(c, x, y):
-        # replication upsampling, exactly the baseline decoder's
-        sx = x * c["h"] // hmax
-        sy = y * c["v"] // vmax
-        return c["plane"][sy * c["pw"] + sx]
-
-    def clamp8(v):
-        iv = math.floor(v + 0.5)
-        return 0 if iv < 0 else (255 if iv > 255 else iv)
-
-    if len(comps) == 1:
-        c0 = comps[0]
-        out = bytearray(width * height)
-        for y in range(height):
-            row = y * c0["pw"]
-            orow = y * width
-            for x in range(width):
-                out[orow + x] = clamp8(c0["plane"][row + x])
-        return width, height, 1, bytes(out)
-
-    cy, ccb, ccr = comps
-    out = bytearray(width * height * 3)
-    for y in range(height):
-        orow = y * width * 3
-        for x in range(width):
-            lum = sample(cy, x, y)
-            cb = sample(ccb, x, y) - 128.0
-            cr = sample(ccr, x, y) - 128.0
-            o = orow + 3 * x
-            out[o] = clamp8(lum + 1.402 * cr)
-            out[o + 1] = clamp8(lum - 0.344136 * cb - 0.714136 * cr)
-            out[o + 2] = clamp8(lum + 1.772 * cb)
-    return width, height, 3, bytes(out)
+        # dequantize in zig-zag order, scatter to raster, batch-IDCT
+        blk = _np.asarray(comp["blocks"], dtype=_np.float64)
+        coefs = _np.empty_like(blk)
+        coefs[:, _ZZ_NP] = blk * _qtab_zz_np(qtab)
+        comp["plane2d"] = _blocks_to_plane2d(
+            coefs, comp["bx_pad"], comp["by_pad"]
+        )
+    return (
+        width,
+        height,
+        len(comps),
+        _planes_to_pixels_np(comps, width, height, hmax, vmax),
+    )
 
 
 class _ProgScanWriter:
@@ -2307,26 +1949,12 @@ def resize_nearest(
     deterministic, codec-free core the resize operator runs between a
     real decode and a real (PNG) re-encode.  Source pixel for output
     (x, y) is (x * width // target_w, y * height // target_h)."""
-    if _np is not None:
-        # pure integer gather — the index arithmetic is the loop's
-        # exact floor-division formula, so output bytes are identical
-        src = _np.frombuffer(bytes(pixels), dtype=_np.uint8).reshape(
-            height, width, channels
-        )
-        ys = (_np.arange(target_h) * height) // target_h
-        xs = (_np.arange(target_w) * width) // target_w
-        return src[ys][:, xs].tobytes()
-    out = bytearray(target_w * target_h * channels)
-    for y in range(target_h):
-        sy = y * height // target_h
-        srow = sy * width * channels
-        orow = y * target_w * channels
-        for x in range(target_w):
-            sx = x * width // target_w
-            s = srow + sx * channels
-            o = orow + x * channels
-            out[o : o + channels] = pixels[s : s + channels]
-    return bytes(out)
+    src = _np.frombuffer(bytes(pixels), dtype=_np.uint8).reshape(
+        height, width, channels
+    )
+    ys = (_np.arange(target_h) * height) // target_h
+    xs = (_np.arange(target_w) * width) // target_w
+    return src[ys][:, xs].tobytes()
 
 
 # ---------------------------------------------------------------------------
@@ -2336,8 +1964,8 @@ def resize_nearest(
 #   * decode: GIF87a/89a, global/local color tables, full- and
 #     sub-rect frames composited with ALL FOUR disposal methods (0/1
 #     draw over, 2 restore background, 3 restore-to-previous via a
-#     saved canvas — round 12) and 4-pass INTERLACED frames (round 12),
-#     transparency honored; undefined disposal values 4-7, oversize
+#     saved canvas) and 4-pass INTERLACED frames, transparency
+#     honored; undefined disposal values 4-7, oversize
 #     frame rects and palette-index overflows raise ValueError
 #     (malformed, never composited).
 #     Frames return as GREYSCALE rasters (ITU-R 601 luma of the
@@ -2400,28 +2028,6 @@ def gif_encode(frames: list, width: int, height: int, delay_cs: int = 10) -> byt
     return bytes(out)
 
 
-class _GifBits:
-    """LSB-first variable-width code reader over LZW sub-block data."""
-
-    def __init__(self, data):
-        self.data = data
-        self.pos = 0
-        self.acc = 0
-        self.nbits = 0
-
-    def read(self, width):
-        while self.nbits < width:
-            if self.pos >= len(self.data):
-                raise ValueError("truncated GIF LZW stream")
-            self.acc |= self.data[self.pos] << self.nbits
-            self.pos += 1
-            self.nbits += 8
-        v = self.acc & ((1 << width) - 1)
-        self.acc >>= width
-        self.nbits -= width
-        return v
-
-
 def _gif_lzw_decode(mcs: int, data: bytes, n_pixels: int) -> bytearray:
     clear, end = 1 << mcs, (1 << mcs) + 1
     # base table built once; a CLEAR merely list-copies it (the bytes
@@ -2430,10 +2036,9 @@ def _gif_lzw_decode(mcs: int, data: bytes, n_pixels: int) -> bytearray:
     base = [bytes([i]) for i in range(1 << mcs)] + [b"", b""]
 
     out = bytearray()
-    # the _GifBits reader, inlined into locals: one code per loop
-    # iteration was paying a method call + attribute traffic per code
-    # (the LZW loop is the GIF decoder's hot path); logic is
-    # _GifBits.read verbatim
+    # LSB-first variable-width code reader in locals: a reader object
+    # pays a method call + attribute traffic per code, and the LZW
+    # loop is the GIF decoder's hot path
     pos, acc, nbits = 0, 0, 0
     nd = len(data)
     # spec does NOT require a leading CLEAR: a stream may open with a
@@ -2543,9 +2148,8 @@ def _gif_decode_impl(blob: bytes) -> tuple[int, int, int, list]:
                 disposal = (flags >> 2) & 0x07
                 if disposal > 3:
                     # 4-7 are undefined by the spec: fail loudly,
-                    # never composite wrong (the interlace policy,
-                    # round-12 advice; 3 = restore-to-previous is
-                    # IMPLEMENTED below via a saved canvas)
+                    # never composite wrong (3 = restore-to-previous
+                    # is IMPLEMENTED below via a saved canvas)
                     raise ValueError(
                         f"GIF disposal method {disposal} is undefined "
                         "(0-3 only)"
@@ -2619,7 +2223,7 @@ def _gif_decode_impl(blob: bytes) -> tuple[int, int, int, list]:
                 row = (top + y) * width + left
                 for x in range(fw):
                     canvas[row + x] = bgv
-        elif disposal == 3:  # restore-to-previous (round 12)
+        elif disposal == 3:  # restore-to-previous
             canvas = bytearray(saved)
         disposal, transparent = 0, None
     if not frames:
@@ -2630,11 +2234,10 @@ def _gif_decode_impl(blob: bytes) -> tuple[int, int, int, list]:
 # ---------------------------------------------------------------------------
 # AVI / Motion-JPEG (RIFF 'AVI ' container, one 'vids' stream whose
 # frames are independent baseline JPEGs) — the real video container
-# behind the round-12 frame-sampling entry.  Zero new codec machinery:
-# the container is the RIFF chunk grammar the WAV path already speaks,
-# and every frame payload is the round-11 T.81 baseline-JPEG codec.
-# Same contract as PNG/JPEG/WAV/GIF above: real format, real parser,
-# stdlib only.  Scope (declared, enforced by explicit raises):
+# behind the frame-sampling entry.  Zero new codec machinery: the
+# container is the RIFF chunk grammar the WAV path already speaks, and
+# every frame payload is the T.81 baseline-JPEG codec above.  Same
+# contract as PNG/JPEG/WAV/GIF above: real format, real parser.  Scope (declared, enforced by explicit raises):
 #   * decode: RIFF/'AVI ' with ONE 'vids' stream, MJPG-compressed
 #     ('MJPG'/'mjpg' fccHandler or biCompression); '00dc'/'00db' movi
 #     chunks decoded by jpeg_decode, color frames reduced to ITU-R 601
@@ -2845,48 +2448,29 @@ def digest_block_frames(digest: bytes, n_frames: int = 2) -> list:
     from 128 that round-trip the quality-50 JPEG quantizer EXACTLY.
     One definition keeps the AVI/MP4/MKV adapters and the DuckDB
     oracle's analytic rebuild from ever drifting apart."""
-    if _np is not None:
-        d = _np.frombuffer(digest[: 4 * n_frames], dtype=_np.uint8)
-        vals = (64 + 2 * (d % 64)).astype(_np.uint8).reshape(n_frames, 2, 2)
-        # blow each 2x2 block-value grid up to 16x16 (8x8 per block)
-        imgs = _np.repeat(_np.repeat(vals, 8, axis=1), 8, axis=2)
-        return [imgs[fi].tobytes() for fi in range(n_frames)]
-    frames = []
-    for fi in range(n_frames):
-        img = bytearray(256)
-        for bi in range(4):
-            v = 64 + 2 * (digest[4 * fi + bi] % 64)
-            oy, ox = (bi // 2) * 8, (bi % 2) * 8
-            for y in range(8):
-                row = (oy + y) * 16 + ox
-                for x in range(8):
-                    img[row + x] = v
-        frames.append(bytes(img))
-    return frames
+    d = _np.frombuffer(digest[: 4 * n_frames], dtype=_np.uint8)
+    vals = (64 + 2 * (d % 64)).astype(_np.uint8).reshape(n_frames, 2, 2)
+    # blow each 2x2 block-value grid up to 16x16 (8x8 per block)
+    imgs = _np.repeat(_np.repeat(vals, 8, axis=1), 8, axis=2)
+    return [imgs[fi].tobytes() for fi in range(n_frames)]
 
 
 def pcm_to_mono_f64(pcm: bytes, n_frames: int, n_ch: int):
     """Decode raw PCM (as returned by wav_decode) to a mono float64
     numpy array: 8-bit unsigned, 16-bit signed or 24-bit signed
     little-endian, multi-channel averaged.  Raises ValueError on
-    other widths.
-
-    The one numpy-importing function in this module — numpy ships
-    wherever the Arrow workers run (it underlies pandas/pyarrow), and
-    importing it lazily keeps every other codec stdlib-pure."""
-    import numpy as np
-
+    other widths."""
     width = len(pcm) // (n_frames * n_ch) if n_frames else 1
     if width == 1:
-        x = np.frombuffer(pcm, dtype=np.uint8).astype(np.float64)
+        x = _np.frombuffer(pcm, dtype=_np.uint8).astype(_np.float64)
     elif width == 2:
-        x = np.frombuffer(pcm, dtype="<i2").astype(np.float64)
+        x = _np.frombuffer(pcm, dtype="<i2").astype(_np.float64)
     elif width == 3:
-        b = np.frombuffer(pcm, dtype=np.uint8).reshape(-1, 3).astype(
-            np.int64
+        b = _np.frombuffer(pcm, dtype=_np.uint8).reshape(-1, 3).astype(
+            _np.int64
         )
         v = b[:, 0] | (b[:, 1] << 8) | (b[:, 2] << 16)
-        x = np.where(v >= 1 << 23, v - (1 << 24), v).astype(np.float64)
+        x = _np.where(v >= 1 << 23, v - (1 << 24), v).astype(_np.float64)
     else:
         raise ValueError(
             f"unsupported PCM sample width {width} (8/16/24-bit only)"
@@ -3576,22 +3160,16 @@ def jpeg_encode_lossless(
         raise ValueError(f"predictor {predictor} out of range 1-7")
 
     out = bytearray(b"\xff\xd8")  # SOI
-
-    def segment(marker, body):
-        out.extend(marker)
-        out.extend(struct.pack(">H", len(body) + 2))
-        out.extend(body)
-
     sof = struct.pack(">BHHB", 8, height, width, channels)
     for ci in range(channels):
         sof += bytes([ci + 1, 0x11, 0])
-    segment(b"\xff\xc3", sof)  # SOF3
+    _segment(out, b"\xff\xc3", sof)  # SOF3
     bits, vals = _H_DC_LUM
-    segment(b"\xff\xc4", b"\x00" + bytes(bits) + bytes(vals))  # DHT
+    _segment(out, b"\xff\xc4", b"\x00" + bytes(bits) + bytes(vals))  # DHT
     sos = bytes([channels])
     for ci in range(channels):
         sos += bytes([ci + 1, 0x00])
-    segment(b"\xff\xda", sos + bytes([predictor, 0, 0]))  # SOS
+    _segment(out, b"\xff\xda", sos + bytes([predictor, 0, 0]))  # SOS
 
     codes = _huff_codes(*_H_DC_LUM)
     writer = _BitWriter()
@@ -3656,15 +3234,7 @@ def _jpeg_decode_lossless_impl(blob: bytes) -> tuple[int, int, int, bytes]:
                         "scope (1x1 factors only)"
                     )
         elif marker == 0xC4:
-            i = 0
-            while i < len(body):
-                tclass, tid = body[i] >> 4, body[i] & 0x0F
-                bits = list(body[i + 1 : i + 17])
-                nv = sum(bits)
-                vals = list(body[i + 17 : i + 17 + nv])
-                if tclass == 0:
-                    huff[tid] = _huff_decode_table(bits, vals)
-                i += 17 + nv
+            _read_dht(body, huff)
         elif marker == 0xDD:
             (ri,) = struct.unpack_from(">H", body)
             if ri:
@@ -3692,10 +3262,10 @@ def _jpeg_decode_lossless_impl(blob: bytes) -> tuple[int, int, int, bytes]:
         pos = end
     if width is None:
         raise ValueError("lossless JPEG scan before SOF3 header")
-    if any(t not in huff for t in table_ids):
+    if any((0, t) not in huff for t in table_ids):
         raise ValueError("lossless JPEG scan references a missing DHT")
 
-    tables = [huff[t] for t in table_ids]
+    tables = [huff[(0, t)] for t in table_ids]
     reader = _BitReader(blob, pos)
     out = bytearray(width * height * nc)
     prev = [None] * nc
@@ -3933,7 +3503,6 @@ def _g711_wav_decode_impl(blob: bytes) -> tuple[int, int, int, bytes]:
             f"WAV compression tag {tag} is out of scope (G.711 "
             "mu-law/A-law only)"
         )
-    expand = ulaw_to_lin16 if tag == 7 else alaw_to_lin16
     if n_ch < 1:
         raise ValueError("WAV declares zero channels")
     if len(data) % n_ch:
@@ -3945,19 +3514,12 @@ def _g711_wav_decode_impl(blob: bytes) -> tuple[int, int, int, bytes]:
             f"G.711 data length {len(data)} is not a whole number of "
             f"{n_ch}-channel frames"
         )
-    if _np is not None:
-        # 256-entry LUT gather: every code maps to the same 16-bit
-        # value the scalar expansion computes (pinned exhaustively in
-        # tests vs audioop); '<i2' matches struct '<h' byte-for-byte.
-        # Real telephony blobs are megabytes — one sample per byte —
-        # so the per-sample Python call was the decode's entire cost.
-        pcm16 = _g711_lut(tag)[
-            _np.frombuffer(data, dtype=_np.uint8)
-        ].tobytes()
-    else:
-        pcm16 = struct.pack(
-            f"<{len(data)}h", *(expand(b) for b in data)
-        )
+    # 256-entry LUT gather: every code maps to the 16-bit value the
+    # scalar expansion computes (pinned exhaustively in tests vs
+    # audioop).  Real telephony blobs are megabytes — one sample per
+    # byte — so a per-sample Python call would be the decode's entire
+    # cost.
+    pcm16 = _g711_lut(tag)[_np.frombuffer(data, dtype=_np.uint8)].tobytes()
     return rate, n_ch, len(data) // n_ch, pcm16
 
 
@@ -4230,35 +3792,16 @@ def _float_wav_decode_impl(blob: bytes) -> tuple[int, int, int, bytes]:
         )
     n = len(data) // 4
 
-    if _np is not None:
-        # vectorized to16: np.rint is round-half-even on the same
-        # float64 product Python round() sees (f32 -> f64 via astype
-        # == struct.unpack's widening), NaN reads as silence and
-        # +/-inf clamps to full scale via the same comparisons
-        f = _np.frombuffer(data, dtype="<f4").astype(_np.float64)
-        r = _np.rint(f * 32767.0)
-        r = _np.where(_np.isnan(f), 0.0, r)
-        r = _np.where(f >= 1.0, 32767.0, r)
-        r = _np.where(f <= -1.0, -32768.0, r)
-        pcm16 = r.astype("<i2").tobytes()
-        return rate, n_ch, n // n_ch, pcm16
-
-    floats = struct.unpack(f"<{n}f", data)
-
-    def to16(v):
-        # non-finite samples occur in real (badly mastered) float
-        # WAVs: +/-inf clamps to full scale, NaN reads as silence —
-        # round() would otherwise leak OverflowError on inf
-        if v != v:  # NaN
-            return 0
-        if v >= 1.0:
-            return 32767
-        if v <= -1.0:
-            return -32768
-        return round(v * 32767.0)
-
-    pcm16 = struct.pack(f"<{n}h", *(to16(v) for v in floats))
-    return rate, n_ch, n // n_ch, pcm16
+    # non-finite samples occur in real (badly mastered) float WAVs:
+    # NaN reads as silence and +/-inf clamps to full scale.  np.rint is
+    # round-half-even on the float64 product (f32 -> f64 widening is
+    # exact), the same rounding as Python round()
+    f = _np.frombuffer(data, dtype="<f4").astype(_np.float64)
+    r = _np.rint(f * 32767.0)
+    r = _np.where(_np.isnan(f), 0.0, r)
+    r = _np.where(f >= 1.0, 32767.0, r)
+    r = _np.where(f <= -1.0, -32768.0, r)
+    return rate, n_ch, n // n_ch, r.astype("<i2").tobytes()
 
 
 def wav_decode_any(blob: bytes) -> tuple[int, int, int, bytes]:
@@ -4313,14 +3856,13 @@ def _is_zstd_magic(blob: bytes) -> bool:
 def zstd_inflate(blob: bytes, ctx: str) -> bytes:
     """RFC 8878 Zstandard shard decoding via pyarrow's BUNDLED zstd
     codec (`pyarrow.input_stream(..., compression="zstd")` — public
-    Arrow API, no `zstandard` module needed; this replaced the
-    round-14 honest stub once the bundled codec was spotted round 15).
-    The streaming CompressedInputStream covers every on-disk shape:
-    FCS-less frames from streaming writers, CONCATENATED frames
-    (appended shards — the .gz-members analogue), and skippable
-    frames; corrupt, truncated, or trailing-garbage streams raise
-    ValueError carrying the caller's context — never a silent
-    truncation (probed behaviors pinned in tests/test_codecs.py)."""
+    Arrow API, no `zstandard` module needed).  The streaming
+    CompressedInputStream covers every on-disk shape: FCS-less frames
+    from streaming writers, CONCATENATED frames (appended shards — the
+    .gz-members analogue), and skippable frames; corrupt, truncated,
+    or trailing-garbage streams raise ValueError carrying the caller's
+    context — never a silent truncation (probed behaviors pinned in
+    tests/test_codecs.py)."""
     import pyarrow as pa
 
     try:

@@ -11,10 +11,10 @@ by blob size.
 
 Decode tiers (the container ships no PIL/cv2/ffmpeg):
   * PNG, baseline JPEG and WAV blobs are decoded FOR REAL —
-    `extensions.codecs` implements the formats on the stdlib (zlib
-    inflate + scanline unfiltering; T.81 Huffman + IDCT; RIFF/`wave`),
-    and `extract_image_features` / `extract_audio_features` dispatch
-    on the magic bytes.  The graded queries `media_png_features` /
+    `extensions.codecs` implements the formats on the stdlib and
+    numpy (zlib inflate + scanline unfiltering; T.81 Huffman + IDCT;
+    RIFF/`wave`), and `extract_image_features` /
+    `extract_audio_features` dispatch on the magic bytes.  The graded queries `media_png_features` /
     `media_jpeg_features` / `media_wav_stats` run these paths
     end-to-end over real encoded bytes, oracle-checked.
   * Frame sampling is REAL for animated GIF (codecs.gif_decode: LZW,

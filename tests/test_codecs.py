@@ -1,4 +1,4 @@
-"""Pure-stdlib PNG/WAV codecs (extensions.codecs) — no Spark needed.
+"""Media codecs (extensions.codecs) — no Spark needed.
 
 The decoder must be a *real* parser: round-trips with our encoder are
 necessary but not sufficient, so the filter tests hand-build PNG
@@ -9,6 +9,7 @@ bad bytes instead of decoding garbage.
 
 from __future__ import annotations
 
+import math
 import struct
 import zlib
 
@@ -41,7 +42,7 @@ def test_png_roundtrip_color(color_type, channels):
     assert out == pixels
 
 
-def _hand_png(width, height, scanlines_with_filters):
+def _hand_png(width, height, scanlines_with_filters, color_type=0):
     """Build a PNG from explicit (filter_type, filtered_bytes) lines."""
 
     def chunk(tag, body):
@@ -52,7 +53,7 @@ def _hand_png(width, height, scanlines_with_filters):
             + struct.pack(">I", zlib.crc32(tag + body) & 0xFFFFFFFF)
         )
 
-    ihdr = struct.pack(">IIBBBBB", width, height, 8, 0, 0, 0, 0)
+    ihdr = struct.pack(">IIBBBBB", width, height, 8, color_type, 0, 0, 0)
     raw = b"".join(bytes([f]) + bytes(line) for f, line in scanlines_with_filters)
     return (
         PNG_MAGIC
@@ -224,7 +225,9 @@ def test_decoders_never_escape_valueerror_fuzz():
     IndexError / struct.error / KeyError / ZeroDivisionError from
     inside a parser, and never a hang (alarm-guarded; a corrupt
     length field driving a zero-progress walk would show up here).
-    ~8k probes, ~1 s."""
+    The two 32x32 4:2:0 color JPEGs are the only streams carrying
+    chroma DQT/DHT tables (and, for the baseline one, an RSTn marker at
+    restart_interval=2).  ~13k probes, ~3 s."""
     import random
     import signal
 
@@ -234,6 +237,10 @@ def test_decoders_never_escape_valueerror_fuzz():
     rgb = bytes(
         (x * 7 + y * 3 + c) % 256
         for y in range(8) for x in range(8) for c in range(3)
+    )
+    rgb32 = bytes(
+        (x * 7 + y * 3 + c * 60 + (x * y) % 13) % 256
+        for y in range(32) for x in range(32) for c in range(3)
     )
     blobs = {
         "jpeg": (C.jpeg_encode(grad, 16, 16), C.jpeg_decode),
@@ -249,6 +256,19 @@ def test_decoders_never_escape_valueerror_fuzz():
         "avi": (C.avi_encode([grad] * 3, 16, 16), C.avi_decode),
         "mp4": (C.mp4_encode([grad] * 3, 16, 16), C.mp4_decode),
         "mkv": (C.mkv_encode([grad] * 3, 16, 16), C.mkv_decode),
+        "jpeg_420_rst": (
+            C.jpeg_encode(
+                rgb32, 32, 32, channels=3, subsample="420",
+                restart_interval=2,
+            ),
+            C.jpeg_decode,
+        ),
+        "jpeg_prog_420": (
+            C.jpeg_encode_progressive(
+                rgb32, 32, 32, channels=3, subsample="420"
+            ),
+            C.jpeg_decode,
+        ),
     }
 
     class Hang(Exception):
@@ -622,43 +642,111 @@ def test_jpeg_roundtrip_property(data):
         assert mean_err < 40
 
 
-def test_jpeg_dct_fast_path_matches_reference():
-    """The numpy matrix DCTs are pinned against the pure-Python
-    reference loops (the no-numpy fallback) to 1e-9 on random blocks,
-    and a full encode/decode round-trip under the fallback matches the
-    fast path's output within a few levels per pixel (an ulp-flipped
-    quantization decision amplifies by the quant step on dequantize, so
-    bit-identity across paths is deliberately NOT claimed)."""
+# The textbook separable DCT loops: the references the batched numpy
+# kernels are pinned against
+_COS = [
+    [math.cos((2 * x + 1) * u * math.pi / 16.0) for x in range(8)]
+    for u in range(8)
+]
+_INV_SQRT2 = 1.0 / math.sqrt(2.0)
+
+
+def _ref_fdct(block):
+    """Forward DCT of a level-shifted 64-float raster block."""
+    out = [0.0] * 64
+    for v in range(8):
+        for u in range(8):
+            s = 0.0
+            cu, cv = _COS[u], _COS[v]
+            for y in range(8):
+                row = block[y * 8 : y * 8 + 8]
+                cvy = cv[y]
+                s += cvy * (
+                    row[0] * cu[0] + row[1] * cu[1] + row[2] * cu[2]
+                    + row[3] * cu[3] + row[4] * cu[4] + row[5] * cu[5]
+                    + row[6] * cu[6] + row[7] * cu[7]
+                )
+            scale = 0.25
+            if u == 0:
+                scale *= _INV_SQRT2
+            if v == 0:
+                scale *= _INV_SQRT2
+            out[v * 8 + u] = scale * s
+    return out
+
+
+def _ref_idct(coef):
+    """Inverse DCT of 64 raster-order dequantized coefficients."""
+    out = [0.0] * 64
+    for y in range(8):
+        for x in range(8):
+            s = 0.0
+            for v in range(8):
+                cvy = _COS[v][y] * (_INV_SQRT2 if v == 0 else 1.0)
+                for u in range(8):
+                    c = coef[v * 8 + u]
+                    if c:
+                        cux = _COS[u][x] * (_INV_SQRT2 if u == 0 else 1.0)
+                        s += cux * cvy * c
+            out[y * 8 + x] = 0.25 * s
+    return out
+
+
+def test_jpeg_dct_kernels_match_reference_loops():
+    """The numpy DCTs against the textbook loops: the matrix FDCT
+    M B M^T to 1e-9, _plane_qz_blocks (edge replication, level shift,
+    FDCT, zig-zag, round-half-away-from-zero quantization) on a 21x13
+    plane with one constant block, and _idct_batch to 1e-9 (with a
+    DC-only row).  A quantized value may differ from the loop's only
+    where the loop's quotient sits within 1e-6 of a .5 tie (matmul and
+    loop fold order differ in the last ulp), and then by one step at
+    most."""
     import random
+
+    import numpy as np
 
     from isaac_kafka_streaming_spark.extensions import codecs as C
 
-    if C._np is None:
-        pytest.skip("numpy not available; only the reference path exists")
     rng = random.Random(7)
-    for _ in range(10):
-        block = [float(rng.randint(-128, 127)) for _ in range(64)]
-        coef = [float(rng.randint(-300, 300)) for _ in range(64)]
-        fast_f, fast_i = C._fdct(block), C._idct(coef)
-        np_mod = C._np
-        C._np = None
-        try:
-            ref_f, ref_i = C._fdct(block), C._idct(coef)
-        finally:
-            C._np = np_mod
-        assert max(abs(a - b) for a, b in zip(fast_f, ref_f)) < 1e-9
-        assert max(abs(a - b) for a, b in zip(fast_i, ref_i)) < 1e-9
+    pw, ph = 21, 13
+    plane = np.array(
+        [[float(rng.randrange(256)) for _ in range(pw)] for _ in range(ph)]
+    )
+    plane[0:8, 8:16] = 77.0  # block (1, 0) is constant: the DC-only path
+    got = C._plane_qz_blocks(plane, pw, ph, 3, 2, C._Q_LUM)
+    assert len(got) == 6
+    for by in range(2):
+        for bx in range(3):
+            block = [
+                plane[min(by * 8 + y, ph - 1), min(bx * 8 + x, pw - 1)]
+                - 128.0
+                for y in range(8)
+                for x in range(8)
+            ]
+            coef = _ref_fdct(block)
+            b = np.array(block).reshape(8, 8)
+            fdct = (C._DCT_M @ b @ C._DCT_M.T).reshape(64).tolist()
+            assert max(abs(a - c) for a, c in zip(fdct, coef)) < 1e-9
+            for i, qz in enumerate(got[by * 3 + bx]):
+                r = coef[C._ZZ[i]] / C._Q_LUM[C._ZZ[i]]
+                want = (
+                    math.floor(r + 0.5) if r >= 0 else -math.floor(0.5 - r)
+                )
+                if abs(abs(r) % 1.0 - 0.5) > 1e-6:
+                    assert qz == want, (bx, by, i, r)
+                else:
+                    assert abs(qz - want) <= 1, (bx, by, i, r)
+    # DC (77 - 128) * 8 / 16 = -25.5 rounds away from zero
+    assert got[1] == [-26] + [0] * 63
 
-    img = bytes((x * 7 + y * 3) % 256 for y in range(16) for x in range(16))
-    fast_rt = C.jpeg_decode(C.jpeg_encode(img, 16, 16))[3]
-    np_mod = C._np
-    C._np = None
-    try:
-        ref_rt = C.jpeg_decode(C.jpeg_encode(img, 16, 16))[3]
-    finally:
-        C._np = np_mod
-    diffs = [abs(a - b) for a, b in zip(fast_rt, ref_rt)]
-    assert max(diffs) <= 8 and sum(diffs) / len(diffs) < 1.0
+    coefs = [
+        [float(rng.randint(-300, 300)) for _ in range(64)] for _ in range(10)
+    ]
+    coefs.append([-96.0] + [0.0] * 63)
+    out = C._idct_batch(np.array(coefs))
+    for row, coef in zip(out.tolist(), coefs):
+        assert max(abs(a - b) for a, b in zip(row, _ref_idct(coef))) < 1e-9
+    assert out[-1].tolist() == [-12.0] * 64  # DC-only: exactly coef / 8
 
 
 # -- animated GIF -----------------------------------------------------------
@@ -1272,8 +1360,7 @@ def test_progressive_jpeg_multiblock_eob_runs():
     def expect_block(k1):
         coef = [0.0] * 64
         coef[C._ZZ[1]] = float(k1)
-        px8 = C._idct(coef)
-        import math
+        px8 = _ref_idct(coef)
         return [
             max(0, min(255, math.floor(v + 128.0 + 0.5))) for v in px8
         ]
@@ -2837,56 +2924,108 @@ def test_cross_codec_anchor_multi_mcu():
         assert a == b, f"cross-codec mismatch at {sub}"
 
 
-def test_png_unfilter_vectorized_matches_reference():
-    """The numpy Sub (lane cumsum mod 256) and Up (uint8 wrap add)
-    unfilter paths must reproduce the reference byte loops exactly on
-    random wide scanlines of every filter type, including rows that
-    chain (each row's reconstruction feeds the next row's Up/Average/
-    Paeth)."""
-    import random
+def test_jpeg_encoders_emit_pinned_bytes():
+    """The three JPEG encoders' exact output bytes, pinned by sha256
+    prefix on a 21x18 image (edge padding in both directions): the
+    baseline and progressive encoders for greyscale and for color at
+    every subsampling, each without and with restart intervals, and
+    the lossless encoder for every predictor at 1 and 3 channels.
+    Decoding round-trips do not notice a reordered segment or a
+    changed table; these digests do.  Each baseline/progressive case
+    encodes twice, so the header-cache hit path is pinned too."""
+    import hashlib
 
     from isaac_kafka_streaming_spark.extensions import codecs as C
 
-    if C._np is None:
-        pytest.skip("numpy not available")
+    w, h = 21, 18
+    grey = bytes(
+        (x * 37 + y * 91 + (x * y * 13) % 29) % 256
+        for y in range(h) for x in range(w)
+    )
+    rgb = bytes(
+        (x * 37 + y * 91 + (x * y * 13) % 29 + c * 85) % 256
+        for y in range(h) for x in range(w) for c in range(3)
+    )
+    want = {
+        ("jpeg_encode", "grey", 0): "f3d03281818f40de",
+        ("jpeg_encode", "444", 0): "62f6aff25ae1f489",
+        ("jpeg_encode", "420", 0): "a167038011c88855",
+        ("jpeg_encode", "422", 0): "28453d22554ccec5",
+        ("jpeg_encode", "440", 0): "22281dca58ae7e6b",
+        ("jpeg_encode", "grey", 3): "6076c2274ddb81d8",
+        ("jpeg_encode", "444", 3): "8344e4b27ed04d7c",
+        ("jpeg_encode", "420", 3): "934f39e8252dae77",
+        ("jpeg_encode", "422", 3): "ce69e57837dcb736",
+        ("jpeg_encode", "440", 3): "be88e9bb2a8ae7ec",
+        ("jpeg_encode_progressive", "grey", 0): "114368a9d337bd05",
+        ("jpeg_encode_progressive", "444", 0): "7fa2b296f3b79a27",
+        ("jpeg_encode_progressive", "420", 0): "e326fa14150a32df",
+        ("jpeg_encode_progressive", "422", 0): "d727585310ff120d",
+        ("jpeg_encode_progressive", "440", 0): "efb1857191570566",
+        ("jpeg_encode_progressive", "grey", 3): "46bb598182579487",
+        ("jpeg_encode_progressive", "444", 3): "6b6ad961ff0fc0f0",
+        ("jpeg_encode_progressive", "420", 3): "44edaf21fd080e5b",
+        ("jpeg_encode_progressive", "422", 3): "099ec2f6bd199574",
+        ("jpeg_encode_progressive", "440", 3): "bca72b1d8ccedc38",
+        ("jpeg_encode_lossless", 1, 1): "44c15aa716698a8c",
+        ("jpeg_encode_lossless", 3, 1): "56c87c81a299aa66",
+        ("jpeg_encode_lossless", 1, 2): "d9af77b372863cbe",
+        ("jpeg_encode_lossless", 3, 2): "fba47506114faef0",
+        ("jpeg_encode_lossless", 1, 3): "67241da345f32250",
+        ("jpeg_encode_lossless", 3, 3): "4d3992c17afae18f",
+        ("jpeg_encode_lossless", 1, 4): "1ce27029d3c37070",
+        ("jpeg_encode_lossless", 3, 4): "27eb08b9689fd45f",
+        ("jpeg_encode_lossless", 1, 5): "affd9973bff2d726",
+        ("jpeg_encode_lossless", 3, 5): "09998e434c44aa47",
+        ("jpeg_encode_lossless", 1, 6): "aefd7be595ae1a45",
+        ("jpeg_encode_lossless", 3, 6): "8ddbe8de26b4c34b",
+        ("jpeg_encode_lossless", 1, 7): "87d76b997711a8d6",
+        ("jpeg_encode_lossless", 3, 7): "0953fa5bab22c6cf",
+    }
+    got = {}
+    for name in ("jpeg_encode", "jpeg_encode_progressive"):
+        enc = getattr(C, name)
+        for ri in (0, 3):
+            for sub in ("grey", "444", "420", "422", "440"):
+                px, ch = (grey, 1) if sub == "grey" else (rgb, 3)
+                kw = dict(
+                    channels=ch,
+                    subsample="444" if sub == "grey" else sub,
+                    restart_interval=ri,
+                )
+                blob = enc(px, w, h, **kw)
+                assert enc(px, w, h, **kw) == blob
+                got[(name, sub, ri)] = blob
+    for pred in range(1, 8):
+        for ch, px in ((1, grey), (3, rgb)):
+            got[("jpeg_encode_lossless", ch, pred)] = C.jpeg_encode_lossless(
+                px, w, h, pred, ch
+            )
+    got = {k: hashlib.sha256(v).hexdigest()[:16] for k, v in got.items()}
+    assert got == want
+
+
+def test_png_unfilter_wide_rows_match_spec_filters():
+    """Rows wider than 32 samples take the numpy Sub (lane cumsum mod
+    256) and Up (uint8 wrap add) unfilters.  Random 80-wide images,
+    filtered line by line with the spec's forward transform (every
+    filter type, Sub and Up repeated, each row chaining through the
+    reconstructed previous row), must decode back to the exact
+    pixels."""
+    import random
+
     rng = random.Random(13)
-    for channels, ctype in ((1, 0), (3, 2)):
-        w, h = 80, 12  # wide enough to engage the numpy paths
-        lines = [
-            (rng.choice([0, 1, 2, 3, 4]),
-             [rng.randrange(256) for _ in range(w * channels)])
-            for _ in range(h)
-        ]
-        blob = _hand_png(w, h, lines) if channels == 1 else None
-        if blob is None:
-            # color variant of _hand_png: same layout, color_type 2
-            import struct as _s
-            import zlib
-
-            def chunk(tag, body):
-                c = tag + body
-                return (
-                    _s.pack(">I", len(body)) + c
-                    + _s.pack(">I", zlib.crc32(c))
-                )
-
-            raw = b"".join(
-                bytes([f]) + bytes(line) for f, line in lines
-            )
-            blob = (
-                b"\x89PNG\r\n\x1a\n"
-                + chunk(
-                    b"IHDR",
-                    _s.pack(">IIBBBBB", w, h, 8, ctype, 0, 0, 0),
-                )
-                + chunk(b"IDAT", zlib.compress(raw))
-                + chunk(b"IEND", b"")
-            )
-        fast = C.png_decode(blob)
-        np_mod = C._np
-        C._np = None
-        try:
-            ref = C.png_decode(blob)
-        finally:
-            C._np = np_mod
-        assert fast == ref
+    filters = [1, 2, 1, 2, 3, 4, 0, 1, 2, 4, 3, 2]
+    for color in (0, 2):
+        channels = _CHANNELS_BY_COLOR[color]
+        w, h = 80, len(filters)
+        stride = w * channels
+        pixels = bytes(rng.randrange(256) for _ in range(stride * h))
+        prev = bytes(stride)
+        lines = []
+        for y, f in enumerate(filters):
+            line = pixels[y * stride : (y + 1) * stride]
+            lines.append((f, _forward_filter(f, line, prev, channels)))
+            prev = line
+        blob = _hand_png(w, h, lines, color_type=color)
+        assert png_decode(blob) == (w, h, channels, pixels)
