@@ -236,11 +236,17 @@ def png_decode(blob: bytes) -> tuple[int, int, int, bytes]:
             raise ValueError(f"PNG chunk {tag!r} CRC mismatch")
         pos += 12 + length
         if tag == b"IHDR":
+            if length != 13:
+                raise ValueError(f"bad PNG IHDR length {length}")
             width, height, depth, color, comp, filt, interlace = struct.unpack(
                 ">IIBBBBB", body
             )
             if depth != 8 or color not in _CHANNELS:
                 raise ValueError(f"unsupported PNG: depth={depth} color={color}")
+            if comp != 0 or filt != 0:
+                raise ValueError(
+                    f"bad PNG compression/filter method {comp}/{filt}"
+                )
             if interlace not in (0, 1):
                 raise ValueError(f"bad PNG interlace method {interlace}")
             channels = _CHANNELS[color]

@@ -6,6 +6,15 @@ shuffle partitions sized to cores rather than the 200 default, UTC
 session timezone so event-time bucketing matches the DuckDB oracle,
 and Arrow enabled for the Pandas-UDF slow path.
 
+Python workers start from `pydaemon`, a wrapper of `pyspark.daemon`.
+Each Python task calls `importlib.invalidate_caches()`, and under
+CPython < 3.12 that re-reads the central directory of
+`$SPARK_HOME/python/lib/pyspark.zip` once per zipimporter the worker
+holds: 140-150 ms of CPU per task on a 4-core box (16 importers after a
+mapInPandas task), the largest fixed cost of a micro-batch's Python
+tasks.  The wrapper re-reads an archive only when its size or mtime
+changed (0.1 ms per task).
+
 On a real cluster the same builder applies — only master/memory change;
 shuffle partitions should scale to ~2-3x total cores and
 `spark.sql.files.maxPartitionBytes` tuned so scan tasks stay ~128-256MB.
@@ -98,6 +107,17 @@ def get_spark(app_name: str = "isaac-kafka-streaming-spark") -> SparkSession:
         # matching DuckDB's read of the same file).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
+        # every forked Python worker inherits the zip re-read patch
+        # (module docstring).  The daemon starts before --py-files reach
+        # the workers, so it imports from the PYTHONPATH below (the repo
+        # root); a cluster needs the package installed on its executors.
+        .config("spark.python.daemon.module", "isaac_kafka_streaming_spark.pydaemon")
+        # spark.sql.streaming.pollingDelay (default 10 ms) was measured
+        # and rejected.  Idle, the seven isaac_stream queries burn
+        # 1.0-1.8 cores re-listing their file source (about 30 % of JVM
+        # samples in FileStreamSource.latestOffset -> InMemoryFileIndex);
+        # 100 ms cut that to about 0.4 cores but did not move the
+        # benchmark's op_p50_s reliably in 5 interleaved pairs.
         .config("spark.driver.memory", default_driver_mem())
         # Python workers must import this package when deserializing
         # applyInPandas/pandas_udf closures.  The driver finds it via

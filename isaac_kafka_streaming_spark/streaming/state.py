@@ -12,6 +12,14 @@ thresholds crossed by that batch's increments — exactly once per
 applyInPandasWithState is the Spark-idiomatic Processor-API equivalent
 (SURVEY.md §2.10 T7): init/process = the generator function, punctuate
 is unused (empty in the reference too), state = GroupState.
+
+The streak and threshold machines take event time across the Python
+boundary as epoch micros (`unix_micros` before the state operator,
+`timestamp_micros` after it).  Their state already holds longs, so the
+workers then handle plain ints: no per-group pandas datetime column,
+no `pd.Timestamp` per output value, and no session-timezone
+conversion on either side of Arrow.  Micros are exactly what a
+TimestampType stores, so the round trip is lossless.
 """
 
 from __future__ import annotations
@@ -20,6 +28,7 @@ from typing import Iterator, Sequence, Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -70,6 +79,7 @@ def streak_state_stream(
     reference's truncating SECONDS.convert compare is a pinned quirk
     discussed in SURVEY.md §7.6.  streak_units reproduces the literal
     floor(floor(span_ms/1000)/7).  Input columns: (user_id, ts).
+    Event time reaches the machine as epoch micros (module docstring).
     """
     gap_ms = gap_seconds * 1000
 
@@ -83,8 +93,7 @@ def streak_state_stream(
             state.get if state.exists else (None, None, 0)
         )
         # gather every chunk before sorting (see threshold processor)
-        for ts in sorted(ts for pdf in pdfs for ts in pdf["ts"]):
-            us = int(ts.value // 1_000)  # pandas ns -> us (exact ts)
+        for us in sorted(us for pdf in pdfs for us in pdf["ts_us"].tolist()):
             # gap compare in ms, truncated per-timestamp like
             # unix_millis does in the batch form
             if (
@@ -102,22 +111,30 @@ def streak_state_stream(
             yield pd.DataFrame(
                 {
                     "user_id": [user_id],
-                    "streak_start": [pd.Timestamp(start_us, unit="us")],
-                    "streak_end": [pd.Timestamp(end_us, unit="us")],
+                    "start_us": [start_us],
+                    "end_us": [end_us],
                     "n_events": [n],
                     "streak_units": [(span_ms // 1000) // 7],
                 }
             )
 
     return (
-        events.select("user_id", "ts")
+        events.select("user_id", F.unix_micros("ts").alias("ts_us"))
         .groupBy("user_id")
         .applyInPandasWithState(
             process,
-            outputStructType=STREAK_OUTPUT_SCHEMA,
+            outputStructType="user_id long, start_us long, end_us long,"
+            " n_events long, streak_units long",
             stateStructType=STREAK_STATE_SCHEMA,
             outputMode="update",
             timeoutConf=GroupStateTimeout.NoTimeout,
+        )
+        .select(
+            "user_id",
+            F.timestamp_micros("start_us").alias("streak_start"),
+            F.timestamp_micros("end_us").alias("streak_end"),
+            "n_events",
+            "streak_units",
         )
     )
 
@@ -131,7 +148,8 @@ def threshold_crossing_stream(
 
     `qualifying` is the stream of events that increment the measure
     (e.g. correct question attempts) with columns
-    (user_id, date_attempted).
+    (user_id, date_attempted).  Event time reaches the machine as epoch
+    micros (module docstring).
     """
     thresholds_set = frozenset(int(t) for t in thresholds)
 
@@ -143,16 +161,15 @@ def threshold_crossing_stream(
         (user_id,) = key
         count = state.get[0] if state.exists else 0
         out_thresholds = []
-        out_ts = []
+        out_us = []
         # a group's batch rows may arrive as SEVERAL chunks — gather
         # them all before sorting, or event-time order only holds
         # within a chunk (a real flake caught by the parity test)
-        all_ts = sorted(ts for pdf in pdfs for ts in pdf["date_attempted"])
-        for ts in all_ts:
+        for us in sorted(us for pdf in pdfs for us in pdf["at_us"].tolist()):
             count += 1
             if count in thresholds_set:
                 out_thresholds.append(count)
-                out_ts.append(ts)
+                out_us.append(us)
         state.update((count,))
         if out_thresholds:
             yield pd.DataFrame(
@@ -160,19 +177,28 @@ def threshold_crossing_stream(
                     "user_id": [user_id] * len(out_thresholds),
                     "achievement_id": [achievement_id] * len(out_thresholds),
                     "threshold": out_thresholds,
-                    "achieved_at": out_ts,
+                    "achieved_at_us": out_us,
                 }
             )
 
     return (
-        qualifying.select("user_id", "date_attempted")
+        qualifying.select(
+            "user_id", F.unix_micros("date_attempted").alias("at_us")
+        )
         .groupBy("user_id")
         .applyInPandasWithState(
             process,
-            outputStructType=OUTPUT_SCHEMA,
+            outputStructType="user_id long, achievement_id string,"
+            " threshold long, achieved_at_us long",
             stateStructType=STATE_SCHEMA,
             outputMode="append",
             timeoutConf=GroupStateTimeout.NoTimeout,
+        )
+        .select(
+            "user_id",
+            "achievement_id",
+            "threshold",
+            F.timestamp_micros("achieved_at_us").alias("achieved_at"),
         )
     )
 
@@ -370,8 +396,6 @@ def priority_sample_stream(docs: DataFrame, k: int = 20) -> DataFrame:
 
     Input: any DataFrame/stream with (doc_id, lang, n_chars).
     """
-    from pyspark.sql import functions as F
-
     u_int = (
         F.conv(
             F.substring(
@@ -644,8 +668,6 @@ def page_transition_state_stream(
     forwards to the state machine so the hot-user pre-split knob holds
     bit-for-bit batch/stream parity when enabled on both sides (see
     page_transition_process)."""
-    import pyspark.sql.functions as F
-
     parsed = events.select(
         "user_id",
         "ts",

@@ -129,6 +129,35 @@ def test_png_rejects_unsupported():
         png_decode(blob)
 
 
+def test_png_rejects_malformed_ihdr():
+    """A CRC-valid IHDR of the wrong length, or one declaring a
+    compression or filter method other than 0, raises ValueError
+    instead of being decoded as method 0."""
+
+    def chunk(tag, body):
+        return (
+            struct.pack(">I", len(body))
+            + tag
+            + body
+            + struct.pack(">I", zlib.crc32(tag + body) & 0xFFFFFFFF)
+        )
+
+    good = png_encode(bytes(range(8)), 4, 2)
+    rest = good[8 + 12 + 13 :]  # the chunks after IHDR
+
+    def with_ihdr(body):
+        return PNG_MAGIC + chunk(b"IHDR", body) + rest
+
+    ok = struct.pack(">IIBBBBB", 4, 2, 8, 0, 0, 0, 0)
+    assert png_decode(with_ihdr(ok))[:3] == (4, 2, 1)
+    with pytest.raises(ValueError, match="IHDR length"):
+        png_decode(with_ihdr(struct.pack(">IIBBBB", 4, 2, 8, 0, 0, 0)))
+    for comp, filt in ((1, 0), (0, 7)):
+        ihdr = struct.pack(">IIBBBBB", 4, 2, 8, 0, comp, filt, 0)
+        with pytest.raises(ValueError, match="compression/filter"):
+            png_decode(with_ihdr(ihdr))
+
+
 def test_wav_roundtrip():
     pcm = bytes((i * 13) % 256 for i in range(320))
     blob = wav_encode(pcm, sample_rate=8000, n_channels=1)

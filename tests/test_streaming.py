@@ -2671,3 +2671,82 @@ def test_next_fit_packer_survives_checkpoint_restart(spark, tmp_path):
     # 60 + 50 > 100: the restored fill forces bin 1 (lost state would
     # have packed doc 2 into a fresh bin 0 next to doc 1)
     assert rows[2].n_tokens == 50 and rows[2].bin == 1
+
+
+def _one_file_stream(spark, tmp_path, schema, rows):
+    """A file-source stream over one parquet file holding `rows`."""
+    src = str(tmp_path / "src")
+    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(src)
+    return spark.readStream.schema(schema).parquet(src)
+
+
+def test_streak_state_gap_boundary_at_microsecond_timestamps(spark, tmp_path):
+    """The streak machine keeps event time exact to the microsecond and
+    compares gaps on ms-truncated timestamps (delta_ms > gap_ms), like
+    unix_millis in the batch form; its schema is the declared one."""
+    import datetime as dt
+
+    from isaac_kafka_streaming_spark.streaming.state import (
+        STREAK_OUTPUT_SCHEMA,
+        streak_state_stream,
+    )
+
+    t0 = dt.datetime(2024, 1, 1, 0, 0, 0, 400)
+    s = dt.timedelta(seconds=1)
+    ms = dt.timedelta(milliseconds=1)
+    us = dt.timedelta(microseconds=1)
+    z = dt.datetime(2024, 1, 2)
+    rows = [
+        # exactly gap_ms apart: same streak
+        (1, t0),
+        (1, t0 + 8 * s),
+        # gap_ms + 1 apart: a new streak
+        (2, t0),
+        (2, t0 + 8 * s + ms),
+        # 8000.001 ms apart in micros, 8001 ms after truncation: new
+        (3, z + 999 * us),
+        (3, z + 8 * s + ms),
+        # 8000.999 ms apart in micros, 8000 ms after truncation: same
+        (4, z),
+        (4, z + 8 * s + 999 * us),
+    ]
+    df = streak_state_stream(
+        _one_file_stream(spark, tmp_path, "user_id long, ts timestamp", rows),
+        gap_seconds=8,
+    )
+    assert df.schema == STREAK_OUTPUT_SCHEMA
+    got = {
+        r.user_id: (r.streak_start, r.streak_end, r.n_events, r.streak_units)
+        for r in st.run_to_memory(df, "streak_us_boundary").collect()
+    }
+    assert got == {
+        1: (t0, t0 + 8 * s, 2, 1),
+        2: (t0 + 8 * s + ms, t0 + 8 * s + ms, 1, 0),
+        3: (z + 8 * s + ms, z + 8 * s + ms, 1, 0),
+        4: (z, z + 8 * s + 999 * us, 2, 1),
+    }
+
+
+def test_threshold_crossing_keeps_microseconds_and_schema(spark, tmp_path):
+    import datetime as dt
+
+    from isaac_kafka_streaming_spark.streaming.state import OUTPUT_SCHEMA
+
+    t0 = dt.datetime(2024, 1, 1, 0, 0, 0, 123456)
+    rows = [(7, t0 + dt.timedelta(microseconds=i)) for i in (3, 1, 2)]
+    df = threshold_crossing_stream(
+        _one_file_stream(
+            spark, tmp_path, "user_id long, date_attempted timestamp", rows
+        ),
+        thresholds=(1, 3),
+    )
+    assert df.schema == OUTPUT_SCHEMA
+    got = sorted(
+        (r.user_id, r.achievement_id, r.threshold, r.achieved_at)
+        for r in st.run_to_memory(df, "crossing_us", output_mode="append").collect()
+    )
+    aid = "QUESTIONS_ANSWERED_CORRECTLY"
+    assert got == [
+        (7, aid, 1, t0 + dt.timedelta(microseconds=1)),
+        (7, aid, 3, t0 + dt.timedelta(microseconds=3)),
+    ]
