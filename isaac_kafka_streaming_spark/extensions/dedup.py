@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.scalars import hex_long, normalized_text_hash
 from ..io import (
     read_documents_spread as _documents,
     read_table,
@@ -77,14 +78,13 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def dedup_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X2 (hash tier) — near-dup by normalized-text sha256."""
-    # measured spread opt-out (round 14, interleaved min-of-5 at
-    # sf0.1): sha2+groupBy is aggregate-light — 0.153 s plain vs
-    # 0.416 s spread; restores the single-exchange plan the driver
-    # bench flagged (0.214 s r12 -> 0.565 s r13)
+    # measured spread opt-out (interleaved min-of-5 at sf0.1):
+    # sha2+groupBy is aggregate-light — 0.153 s plain vs 0.416 s
+    # spread; the spread's extra exchange had made this entry 2.6x
+    # slower on the bench (0.214 s -> 0.565 s)
     docs = read_table(spark, sf_dir, "documents")
-    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
     return (
-        docs.withColumn("text_hash", F.sha2(norm, 256))
+        docs.withColumn("text_hash", normalized_text_hash("text"))
         .groupBy("text_hash")
         .agg(
             F.min("doc_id").alias("canonical_doc_id"),
@@ -422,13 +422,6 @@ def _lsh_pairs_verify(
     ).select("doc_a", "doc_b", "jaccard")
 
 
-def _md5long(col):
-    """Engine-neutral 60-bit hash: first 15 hex digits of md5, as long.
-    Spark conv(hex,16,10) and DuckDB CAST('0x'||hex AS BIGINT) produce
-    identical values, so MinHash built on this is oracle-replayable."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
 def _md5_band_table(
     shingled: DataFrame, num_hashes: int, band_size: int
 ) -> DataFrame:
@@ -444,12 +437,8 @@ def _md5_band_table(
         .withColumn("md", F.md5("s"))
         .select(
             "doc_id",
-            F.conv(F.substring("md", 1, 15), 16, 10)
-            .cast("long")
-            .alias("h1"),
-            F.conv(F.substring("md", 16, 14), 16, 10)
-            .cast("long")
-            .alias("h2"),
+            hex_long("md", 1, 15).alias("h1"),
+            hex_long("md", 16, 14).alias("h2"),
         )
     )
     mask = (1 << 60) - 1
@@ -1686,15 +1675,15 @@ def simhash_pairs_md5(
     optimizes for being obviously the textbook algorithm, not for
     speed — the packed production form is equality-tested against its
     own unpacked baseline in tests.  The chunk banding + Hamming
-    verification IS the production tier's (_simhash_chunk_join —
-    retire-merged round 10): only the signature hash family differs.
+    verification IS the production tier's (_simhash_chunk_join, shared
+    with simhash_pairs): only the signature hash family differs.
     """
     bits = 60
     docs = _documents(spark, sf_dir)
     tok = docs.select(
         "doc_id",
         F.explode(F.array_distinct(_tokens(F.col("text")))).alias("token"),
-    ).withColumn("h", _md5long(F.col("token")))
+    ).withColumn("h", hex_long(F.md5(F.col("token")), 1, 15))  # 60 bits
     bit_sums = tok.groupBy("doc_id").agg(
         F.expr("count(*) AS n_tok"),
         *[F.expr(f"sum((h >> {i}) & 1) AS b{i}") for i in range(bits)],
@@ -1731,9 +1720,7 @@ def dedup_incoming(
     docs = _documents(spark, sf_dir)
     from .sampling import _bucket
 
-    norm_hash = F.sha2(
-        F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")), 256
-    )
+    norm_hash = normalized_text_hash("text")
     hashed = docs.select(
         "doc_id", norm_hash.alias("text_hash"), _bucket(F.col("doc_id"), "inc")
     )
@@ -1758,7 +1745,7 @@ def bloom_pos_expr(i_col, hash_col, m_bits: int):
     definition: build/probe agreement is what the no-false-negative
     guarantee rests on."""
     h = F.md5(F.concat(i_col.cast("string"), F.lit(":"), hash_col))
-    return F.conv(F.substring(h, 1, 6), 16, 10).cast("long") % m_bits
+    return hex_long(h, 1, 6) % m_bits
 
 
 def _bloom_positions(hashed: DataFrame, m_bits: int, k: int) -> DataFrame:
@@ -1811,19 +1798,16 @@ def bloom_prefilter(
     probe — is engine-exact and oracle-checked, unlike a production
     xxhash/murmur Bloom whose bits the oracle couldn't replay (that
     production tier is `DataFrame.stat` territory; this is its graded
-    witness).  STAGED round 6, REGISTERED round 7 (round-6 window saturated);
-    BLOOM_PREFILTER_ORACLE_SQL is parity-tested now
-    (tests/test_dedup_guards.py)."""
+    witness).  BLOOM_PREFILTER_ORACLE_SQL is its DuckDB twin
+    (parity-tested in tests/test_dedup_guards.py)."""
     docs = (
-        # measured spread opt-out (round 13): aggregate-light;
+        # measured spread opt-out: aggregate-light;
         # the exchange costs more than the single-split scan
         read_table(spark, sf_dir, "documents")
     )
     from .sampling import _bucket
 
-    norm_hash = F.sha2(
-        F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")), 256
-    )
+    norm_hash = normalized_text_hash("text")
     hashed = docs.select(
         "doc_id", norm_hash.alias("text_hash"), _bucket(F.col("doc_id"), "inc")
     )
@@ -1859,8 +1843,8 @@ def bloom_prefilter(
     )
 
 
-# DuckDB twin for bloom_prefilter — parity-tested now
-# (tests/test_dedup_guards.py), registered in round 7.
+# DuckDB twin for bloom_prefilter — parity-tested in
+# tests/test_dedup_guards.py.
 BLOOM_PREFILTER_ORACLE_SQL = """
 WITH h AS (
     SELECT doc_id,

@@ -54,6 +54,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.scalars import normalized_text_hash
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType()),
@@ -2201,9 +2203,7 @@ def _curate_and_mix(ingested: DataFrame, docs: DataFrame) -> DataFrame:
     from .text import _STOPWORDS, _n_in
 
     joined = ingested.join(docs.select("doc_id", "lang"), "doc_id")
-    norm_hash = F.sha2(
-        F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")), 256
-    )
+    norm_hash = normalized_text_hash("text")
     w = Window.partitionBy("text_hash")
     avg_len = F.round(
         F.aggregate(
@@ -2242,8 +2242,8 @@ def _curate_and_mix(ingested: DataFrame, docs: DataFrame) -> DataFrame:
     )
     # scalar chain as unpartitioned window aggregates over the
     # |langs|-row frame — one SinglePartition exchange, no sort,
-    # instead of an aggregate job + broadcast build per scalar
-    # (round-15 optimization, the temperature_mixture recipe)
+    # instead of an aggregate job + broadcast build per scalar (the
+    # temperature_mixture recipe)
     w_all = Window.partitionBy()
     planned = (
         per_lang

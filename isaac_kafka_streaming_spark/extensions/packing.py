@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.scalars import hex_long
 from ..io import read_table
 from .text import _tokens
 
@@ -44,7 +45,7 @@ def _sharded(docs: DataFrame, n_shards: int, *extra_cols) -> DataFrame:
         "doc_id", h.alias("h"), *extra_cols
     ).withColumn(
         "shard",
-        F.conv(F.substring("h", 1, 4), 16, 10).cast("long") % n_shards,
+        hex_long("h", 1, 4) % n_shards,
     )
 
 
@@ -291,14 +292,25 @@ def length_bucket_plan(
     the bucket_len = -1 overflow row with zero padding (they are
     routed to chunking, not padded).  Scale shape: one scan, one
     map-side projection, one tiny aggregate (|buckets|+1 rows) —
-    nothing else.
+    nothing else.  The two stages are length_bucket_counts and
+    length_bucket_waste; the streaming twin runs the first as its
+    update-mode aggregate and the second at read time.
     """
-    docs = read_table(spark, sf_dir, "documents")
+    return length_bucket_waste(
+        length_bucket_counts(read_table(spark, sf_dir, "documents"), buckets)
+    )
+
+
+def length_bucket_counts(
+    docs: DataFrame, buckets: tuple = LENGTH_BUCKETS
+) -> DataFrame:
+    """(bucket_len, n_docs, total_tokens): each document's token count
+    laddered into its bucket, then one per-bucket aggregate."""
     n = F.size(_tokens(F.col("text"))).cast("long")
     bucket = F.lit(-1).cast("long")
     for b in sorted(buckets, reverse=True):
         bucket = F.when(n <= b, F.lit(b).cast("long")).otherwise(bucket)
-    agg = (
+    return (
         docs.select(n.alias("n_tokens"), bucket.alias("bucket_len"))
         .groupBy("bucket_len")
         .agg(
@@ -306,10 +318,16 @@ def length_bucket_plan(
             F.sum("n_tokens").alias("total_tokens"),
         )
     )
+
+
+def length_bucket_waste(counts: DataFrame) -> DataFrame:
+    """The waste read-off over length_bucket_counts' rows: padded
+    tokens (n_docs * bucket_len; the overflow row pads nothing) and
+    waste_pct."""
     padded = F.when(
         F.col("bucket_len") > 0, F.col("n_docs") * F.col("bucket_len")
     ).otherwise(F.col("total_tokens"))
-    return agg.select(
+    return counts.select(
         "bucket_len",
         "n_docs",
         "total_tokens",

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.scalars import hex_long, normalized_text_hash
 from ..io import (
     read_documents_spread as _documents,
     read_table,
@@ -33,9 +34,7 @@ DEFAULT_KEEP_PCT = 100
 def _bucket(key_col, salt: str = ""):
     """Deterministic 0-99 bucket from md5(salt || key)."""
     h = F.md5(F.concat(F.lit(salt), key_col.cast("string")))
-    return (F.conv(F.substring(h, 1, 4), 16, 10).cast("long") % 100).alias(
-        "bucket"
-    )
+    return (hex_long(h, 1, 4) % 100).alias("bucket")
 
 
 def split_assignment(docs: DataFrame) -> DataFrame:
@@ -114,9 +113,7 @@ def split_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline must prove absent.  Pairs each contaminated eval doc with
     the lowest-id train doc sharing its hash."""
     docs = _documents(spark, sf_dir)
-    norm_hash = F.sha2(
-        F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")), 256
-    )
+    norm_hash = normalized_text_hash("text")
     hashed = with_split(docs).select(
         "doc_id", norm_hash.alias("text_hash"), "split"
     )
@@ -554,13 +551,11 @@ def soft_dedup_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     canonical table and no second pass.
     """
     docs = (
-        # measured spread opt-out (round 13): aggregate-light;
+        # measured spread opt-out: aggregate-light;
         # the exchange costs more than the single-split scan
         read_table(spark, sf_dir, "documents")
     )
-    norm_hash = F.sha2(
-        F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")), 256
-    )
+    norm_hash = normalized_text_hash("text")
     hashed = docs.select("doc_id", norm_hash.alias("text_hash"))
     n_copies = F.count("*").over(Window.partitionBy("text_hash"))
     return (
@@ -604,6 +599,20 @@ def stratified_topk_sample(
     )
 
 
+def priority_u_int(salt: str) -> "F.Column":
+    """The priority draw's integer u in [1, 2^24]: a 24-bit md5 slice of
+    the salted doc identity, plus one.  Shared by priority_sample and
+    its streaming reservoir (streaming.state.priority_sample_stream)."""
+    return (
+        hex_long(
+            F.md5(F.concat(F.lit(salt + ":"), F.col("doc_id").cast("string"))),
+            1,
+            6,
+        )
+        + 1
+    )
+
+
 def priority_sample(
     spark: SparkSession, sf_dir: str, k: int = 20, salt: str = "ws"
 ) -> DataFrame:
@@ -628,29 +637,12 @@ def priority_sample(
 
     Shape at 100 TB: one shuffle on the stratum key; the rank window is
     per-stratum.  A stratum with <= k members keeps everything with
-    est_weight = w (tau is NULL -> 0).  STAGED round 6, REGISTERED round 7 (window
-    saturated); PRIORITY_SAMPLE_ORACLE_SQL below is parity-tested now
-    (tests/test_sampling_staged.py)."""
+    est_weight = w (tau is NULL -> 0).  PRIORITY_SAMPLE_ORACLE_SQL below
+    is its DuckDB twin (parity-tested in tests/test_sampling_staged.py)."""
     docs = (
-        # measured spread opt-out (round 13): aggregate-light;
+        # measured spread opt-out: aggregate-light;
         # the exchange costs more than the single-split scan
         read_table(spark, sf_dir, "documents")
-    )
-    u_int = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit(salt + ":"), F.col("doc_id").cast("string")
-                    )
-                ),
-                1,
-                6,
-            ),
-            16,
-            10,
-        ).cast("long")
-        + 1
     )
     q = (F.col("n_chars") * F.lit(float(1 << 24))) / F.col("u_int")
     w_rank = Window.partitionBy("lang").orderBy(
@@ -658,7 +650,9 @@ def priority_sample(
     )
     w_str = Window.partitionBy("lang")
     ranked = (
-        docs.select("doc_id", "lang", "n_chars", u_int.alias("u_int"))
+        docs.select(
+            "doc_id", "lang", "n_chars", priority_u_int(salt).alias("u_int")
+        )
         .withColumn("q", q)
         .withColumn("prio_rank", F.row_number().over(w_rank).cast("bigint"))
         .filter(F.col("prio_rank") <= k + 1)
@@ -682,8 +676,8 @@ def priority_sample(
     )
 
 
-# DuckDB twin for priority_sample — parity-tested now
-# (tests/test_sampling_staged.py), registered in round 7.
+# DuckDB twin for priority_sample — parity-tested in
+# tests/test_sampling_staged.py.
 PRIORITY_SAMPLE_ORACLE_SQL = """
 WITH keyed AS (
     SELECT doc_id, lang, n_chars,
@@ -731,15 +725,12 @@ def epoch_shuffle(
     crashed epoch re-reads identical shards.
     """
     docs = (
-        # measured spread opt-out (round 13): aggregate-light;
+        # measured spread opt-out: aggregate-light;
         # the exchange costs more than the single-split scan
         read_table(spark, sf_dir, "documents")
     )
     okey = F.md5(F.concat_ws(":", F.lit(epoch), F.col("doc_id")))
-    shard = (
-        F.conv(F.substring(F.col("order_key"), 1, 2), 16, 10).cast("long")
-        % n_shards
-    ).cast("int")
+    shard = (hex_long("order_key", 1, 2) % n_shards).cast("int")
     w = Window.partitionBy("shard").orderBy("order_key", "doc_id")
     return (
         docs.select("doc_id", okey.alias("order_key"))
@@ -785,31 +776,16 @@ def dsir_bucket_expr(feat_col, n_buckets=DSIR_BUCKETS) -> "F.Column":
     python replica test.  ``n_buckets`` may be an int or a Column —
     the streaming scorer passes the model row's own n_buckets so a
     non-default model can never silently disagree with the fold."""
-    return (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("ds:"), feat_col)), 1, 6
-            ),
-            16,
-            10,
-        ).cast("long")
-        % n_buckets
-    )
+    return hex_long(F.md5(F.concat(F.lit("ds:"), feat_col)), 1, 6) % n_buckets
 
 
 def dsir_gumbel(doc_id_col) -> "F.Column":
     """The resampling noise: g = -ln(-ln(u)) with u an engine-exact
     24-bit md5 slice of the doc identity (salt 'dg:'), mapped into
     (0, 1)."""
-    u_int = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("dg:"), doc_id_col.cast("string"))),
-            1,
-            6,
-        ),
-        16,
-        10,
-    ).cast("long")
+    u_int = hex_long(
+        F.md5(F.concat(F.lit("dg:"), doc_id_col.cast("string"))), 1, 6
+    )
     u = (u_int + 1) / F.lit(float((1 << 24) + 1))
     return -F.log(-F.log(u))
 

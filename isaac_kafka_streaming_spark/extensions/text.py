@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.scalars import hex_long, normalized_text_hash
 from ..io import (
     read_documents_spread as _documents,
     read_table,
@@ -230,13 +231,11 @@ def corpus_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     docs = (
-        # measured spread opt-out (round 13): aggregate-light;
+        # measured spread opt-out: aggregate-light;
         # the exchange costs more than the single-split scan
         read_table(spark, sf_dir, "documents")
     )
-    norm_hash = F.sha2(
-        F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")), 256
-    )
+    norm_hash = normalized_text_hash("text")
     w = Window.partitionBy("text_hash")
     flags = (
         docs.withColumn("text_hash", norm_hash)
@@ -286,9 +285,7 @@ def card_projection(docs: DataFrame) -> DataFrame:
     drift between the two forms."""
     from .sampling import _bucket
 
-    norm_hash = F.sha2(
-        F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")), 256
-    )
+    norm_hash = normalized_text_hash("text")
     return docs.select(
         "doc_id",
         "lang",
@@ -591,9 +588,7 @@ def corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     r = repetition_metrics(spark, sf_dir).select("doc_id", "keep_repetition")
     docs = _documents(spark, sf_dir)
-    norm_hash = F.sha2(
-        F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")), 256
-    )
+    norm_hash = normalized_text_hash("text")
     toks = _tokens(F.col("text"))
     w = Window.partitionBy("text_hash")
     avg_len = F.round(
@@ -826,7 +821,7 @@ def _cms_col(r_col, token_col, w: int):
     """Column index of hash row r for a token: md5(r ':' token) mod w —
     md5-derived so both engines (and the streaming form) agree."""
     h = F.md5(F.concat(r_col.cast("string"), F.lit(":"), token_col))
-    return F.conv(F.substring(h, 1, 6), 16, 10).cast("long") % w
+    return hex_long(h, 1, 6) % w
 
 
 def cms_positions(
@@ -1353,6 +1348,44 @@ WINNOW_W = 5  # window width (guarantee: every w consecutive k-grams
 #               contribute >= 1 fingerprint; expected density 2/(w+1))
 
 
+def _winnow_fps(docs: DataFrame, k: int, w: int) -> DataFrame:
+    """(doc_id, tokens, packed_arr, fps) — the per-row robust winnowing
+    selection that winnow_fingerprints and winnow_fp_hashes read.
+    packed_arr holds each k-gram's first-7-hex md5 hash packed with its
+    rightmost-wins position, hash * 2^32 + (2^31 - pos); fps is the
+    distinct sliding-window MIN of that array.  packed_arr is a real
+    column so the window transform references it once per row, not
+    once per window (the inlined form re-evaluates the whole array per
+    element — O(n^2) on long docs).  Docs with fewer than w full
+    windows (less than k + w - 1 tokens) drop."""
+    toks = docs.select(
+        "doc_id", _tokens(F.col("text")).alias("tokens")
+    ).filter(F.size("tokens") >= k + w - 1)
+    big = F.lit(4294967296).cast("long")
+    packed = toks.withColumn(
+        "packed_arr",
+        F.transform(
+            F.sequence(F.lit(1), F.size("tokens") - k + 1),
+            lambda i: hex_long(
+                F.md5(F.array_join(F.slice(F.col("tokens"), i, k), " ")), 1, 7
+            )
+            * big
+            + (F.lit(2147483648).cast("long") - i.cast("long")),
+        ),
+    )
+    return packed.withColumn(
+        "fps",
+        F.array_distinct(
+            F.transform(
+                F.sequence(F.lit(w), F.size("packed_arr")),
+                lambda e: F.array_min(
+                    F.slice(F.col("packed_arr"), e - w + 1, w)
+                ),
+            )
+        ),
+    )
+
+
 def winnow_fingerprints(
     spark: SparkSession, sf_dir: str, k: int = WINNOW_K, w: int = WINNOW_W
 ) -> DataFrame:
@@ -1383,39 +1416,7 @@ def winnow_fingerprints(
     remains the reference formulation, equality-pinned in test.  Docs
     with fewer than w full windows (less than k + w - 1 tokens) drop,
     matching the oracle."""
-    docs = _documents(spark, sf_dir)
-    toks = docs.select(
-        "doc_id", _tokens(F.col("text")).alias("tokens")
-    ).filter(F.size("tokens") >= k + w - 1)
-    big = F.lit(4294967296).cast("long")
-    packed = toks.withColumn(
-        "packed_arr",
-        F.transform(
-            F.sequence(F.lit(1), F.size("tokens") - k + 1),
-            lambda i: F.conv(
-                F.substring(
-                    F.md5(F.array_join(F.slice(F.col("tokens"), i, k), " ")),
-                    1,
-                    7,
-                ),
-                16,
-                10,
-            ).cast("long")
-            * big
-            + (F.lit(2147483648).cast("long") - i.cast("long")),
-        ),
-    )
-    fps = packed.withColumn(
-        "fps",
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(w), F.size("packed_arr")),
-                lambda e: F.array_min(
-                    F.slice(F.col("packed_arr"), e - w + 1, w)
-                ),
-            )
-        ),
-    )
+    fps = _winnow_fps(_documents(spark, sf_dir), k, w)
     n_kg = (F.size("tokens") - k + 1).cast("long")
     n_fp = F.size("fps").cast("long")
     return fps.select(
@@ -1456,9 +1457,7 @@ def _winnow_selected(
         "doc_id",
         "n_kgrams",
         (F.col("pos0") + 1).cast("long").alias("pos"),
-        F.conv(F.substring(F.md5(F.col("kgram")), 1, 7), 16, 10)
-        .cast("long")
-        .alias("h"),
+        hex_long(F.md5(F.col("kgram")), 1, 7).alias("h"),
     )
     packed = kg.withColumn(
         "packed",
@@ -1480,8 +1479,8 @@ def _winnow_selected(
     )
 
 
-# DuckDB twin for winnow_fingerprints — parity-tested now
-# (tests/test_text_extras.py), wired into register() in round 7.
+# DuckDB twin for winnow_fingerprints — parity-tested in
+# tests/test_text_extras.py.
 WINNOW_FINGERPRINTS_ORACLE_SQL = f"""
 WITH tok AS (
     SELECT doc_id, list_filter(regexp_split_to_array(lower(text),
@@ -1521,49 +1520,14 @@ FROM sel GROUP BY doc_id
 def winnow_fp_hashes(docs: DataFrame, k: int = WINNOW_K, w: int = WINNOW_W):
     """Shuffle-free winnowing: the same robust fingerprint selection as
     _winnow_selected, but computed per-ROW with higher-order array
-    functions (the sliding-window MIN over the doc's own packed-hash
-    array) instead of a partitioned window — NO exchange at all, which
-    also makes it legal on a STREAMING DataFrame, where window
-    functions are not.  The packed array is materialized as a real
-    column first so the window transform references it once per row,
-    not once per window (the inlined form re-evaluates the whole array
-    per element — O(n^2) on long docs).
+    functions (_winnow_fps) instead of a partitioned window — NO
+    exchange at all, which also makes it legal on a STREAMING
+    DataFrame, where window functions are not.
 
     Returns (doc_id, fph) distinct — the position-stripped fingerprint
     HASHES (what the probe joins on).  Equality with the windowed
     relation is pinned in test."""
-    toks = docs.select(
-        "doc_id", _tokens(F.col("text")).alias("tokens")
-    ).filter(F.size("tokens") >= k + w - 1)
-    big = F.lit(4294967296).cast("long")
-    packed = toks.withColumn(
-        "packed_arr",
-        F.transform(
-            F.sequence(F.lit(1), F.size("tokens") - k + 1),
-            lambda i: F.conv(
-                F.substring(
-                    F.md5(F.array_join(F.slice(F.col("tokens"), i, k), " ")),
-                    1,
-                    7,
-                ),
-                16,
-                10,
-            ).cast("long")
-            * big
-            + (F.lit(2147483648).cast("long") - i.cast("long")),
-        ),
-    )
-    fps = packed.withColumn(
-        "fps",
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(w), F.size("packed_arr")),
-                lambda e: F.array_min(
-                    F.slice(F.col("packed_arr"), e - w + 1, w)
-                ),
-            )
-        ),
-    )
+    fps = _winnow_fps(docs, k, w)
     return fps.select(
         "doc_id",
         F.explode(
@@ -1724,8 +1688,7 @@ def feature_hash_embed(
     )
     counts = tok.withColumn(
         "d",
-        F.conv(F.substring(F.md5(F.col("w")), 1, 4), 16, 10).cast("long")
-        % dim,
+        hex_long(F.md5(F.col("w")), 1, 4) % dim,
     ).groupBy("doc_id", "d").agg(F.count("*").alias("c"))
     sparse = counts.groupBy("doc_id").agg(
         F.map_from_entries(
@@ -1748,8 +1711,8 @@ def feature_hash_embed(
     )
 
 
-# DuckDB twin for feature_hash_embed — parity-tested now
-# (tests/test_text_extras.py), wired into register() in round 7.
+# DuckDB twin for feature_hash_embed — parity-tested in
+# tests/test_text_extras.py.
 FEATURE_HASH_EMBED_ORACLE_SQL = f"""
 WITH tok AS (
     SELECT doc_id, UNNEST(list_filter(regexp_split_to_array(lower(text),
@@ -1828,6 +1791,64 @@ BM25_N_QUERIES = 5
 BM25_TOP_DOCS = 10
 
 
+def _bm25_postings(docs: DataFrame, n_queries: int):
+    """(tf, dl, stats, queries) — BM25's corpus aggregate chain, shared
+    by bm25_top_docs and its streaming index (bm25_query_index): tf per
+    (doc_id, w), dl per doc_id, the 1-row (n_docs, avgdl) scalar, and
+    the query pick — the `n_queries` most frequent non-stopword terms
+    (total occurrences DESC, term ASC) with their df.
+
+    .cache() on the postings: dl, df/cf, the query pick and the
+    scoring join all derive from tf — uncached, each re-executed the
+    corpus explode (4 documents scans measured; 1 after).  dl is
+    sum(tf) per doc (identical to counting the raw explode — every
+    occurrence is in exactly one (doc, term) group)."""
+    tok = docs.select(
+        "doc_id", F.explode(_tokens(F.col("text"))).alias("w")
+    )
+    tf = tok.groupBy("doc_id", "w").agg(F.count("*").alias("tf")).cache()
+    dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
+    stats = dl.agg(
+        F.count("*").alias("n_docs"), F.avg("dl").alias("avgdl")
+    )
+    df_t = tf.groupBy("w").agg(
+        F.count("*").alias("df"), F.sum("tf").alias("cf")
+    )
+    queries = (
+        df_t.filter(~F.col("w").isin(*_STOPWORDS))
+        .orderBy(F.col("cf").desc(), F.col("w"))
+        .limit(n_queries)
+        .select("w", "df")
+    )
+    return tf, dl, stats, queries
+
+
+def bm25_score(k1: float, b: float) -> "F.Column":
+    """The 6-dp BM25 score over columns tf, dl, df, n_docs and avgdl:
+    idf * tf*(k1+1) / (tf + k1*(1 - b + b*dl/avgdl)) with the Lucene
+    +1 idf, ln((N - df + 0.5) / (df + 0.5) + 1).  Shared by
+    bm25_top_docs and streaming.topology.streaming_bm25_score, so the
+    stream scores bit-for-bit like the batch."""
+    idf = F.log(
+        (F.col("n_docs") - F.col("df") + F.lit(0.5))
+        / (F.col("df") + F.lit(0.5))
+        + F.lit(1.0)
+    )
+    return F.round(
+        idf
+        * (F.col("tf") * F.lit(k1 + 1.0))
+        / (
+            F.col("tf")
+            + F.lit(k1)
+            * (
+                F.lit(1.0 - b)
+                + F.lit(b) * F.col("dl") / F.col("avgdl")
+            )
+        ),
+        6,
+    )
+
+
 def bm25_top_docs(
     spark: SparkSession,
     sf_dir: str,
@@ -1852,7 +1873,7 @@ def bm25_top_docs(
     ROUNDED score (6 dp) with doc_id tie-break so an ulp of ln()
     divergence can never reorder the cutoff (the pmi_top_pairs
     discipline; ln itself is cross-engine-stable at 6 dp, proven by
-    the PMI entry's hash checks since round 6).
+    the PMI entry's hash checks).
 
     Scale shape: one token explode feeds tf, dl, df and the query
     pick; tf/dl/df are map-side-combinable aggregates; N/avgdl are a
@@ -1862,46 +1883,8 @@ def bm25_top_docs(
     """
     from pyspark.sql import Window
 
-    docs = _documents(spark, sf_dir)
-    tok = docs.select(
-        "doc_id", F.explode(_tokens(F.col("text"))).alias("w")
-    )
-    # .cache() on the postings: dl, df/cf, the query pick and the
-    # scoring join all derive from tf — uncached, each re-executed the
-    # corpus explode (4 documents scans measured; 1 after).  dl is
-    # sum(tf) per doc (identical to counting the raw explode — every
-    # occurrence is in exactly one (doc, term) group).
-    tf = tok.groupBy("doc_id", "w").agg(F.count("*").alias("tf")).cache()
-    dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
-    stats = dl.agg(
-        F.count("*").alias("n_docs"), F.avg("dl").alias("avgdl")
-    )
-    df_t = tf.groupBy("w").agg(
-        F.count("*").alias("df"), F.sum("tf").alias("cf")
-    )
-    queries = (
-        df_t.filter(~F.col("w").isin(*_STOPWORDS))
-        .orderBy(F.col("cf").desc(), F.col("w"))
-        .limit(n_queries)
-        .select("w", "df")
-    )
-    idf = F.log(
-        (F.col("n_docs") - F.col("df") + F.lit(0.5))
-        / (F.col("df") + F.lit(0.5))
-        + F.lit(1.0)
-    )
-    score = F.round(
-        idf
-        * (F.col("tf") * F.lit(k1 + 1.0))
-        / (
-            F.col("tf")
-            + F.lit(k1)
-            * (
-                F.lit(1.0 - b)
-                + F.lit(b) * F.col("dl") / F.col("avgdl")
-            )
-        ),
-        6,
+    tf, dl, stats, queries = _bm25_postings(
+        _documents(spark, sf_dir), n_queries
     )
     scored = (
         tf.join(F.broadcast(queries), "w")
@@ -1911,7 +1894,7 @@ def bm25_top_docs(
             "w",
             "doc_id",
             F.col("tf").cast("long").alias("tf"),
-            score.alias("bm25"),
+            bm25_score(k1, b).alias("bm25"),
         )
     )
     w_rank = Window.partitionBy("w").orderBy(
@@ -1934,32 +1917,15 @@ def bm25_query_index(
     """The STATIC side of streaming BM25 scoring: the query-term
     dimension (term, its document frequency) carrying the corpus
     scalars (n_docs, avgdl) on every row — built offline from the
-    corpus with exactly bm25_top_docs' term pick (total occurrences
-    DESC, term ASC over non-stopwords) and aggregate chain, so the
-    streaming scorer reproduces the batch scores bit-for-bit.
+    corpus with bm25_top_docs' own aggregate chain (_bm25_postings),
+    so the streaming scorer reproduces the batch scores bit-for-bit.
 
     At 100 TB this is the trusted benchmark's term list plus two
     corpus statistics — a few-KB broadcast dim refreshed by a periodic
     batch job, the same artifact-lifecycle as the IVF centroid index
     (similarity.build_ivf_index) and the eval anchor index
     (dedup.eval_anchor_index)."""
-    docs = _documents(spark, sf_dir)
-    tok = docs.select(
-        "doc_id", F.explode(_tokens(F.col("text"))).alias("w")
-    )
-    tf = tok.groupBy("doc_id", "w").agg(F.count("*").alias("tf"))
-    dl = tok.groupBy("doc_id").agg(F.count("*").alias("dl"))
-    stats = dl.agg(
-        F.count("*").alias("n_docs"), F.avg("dl").alias("avgdl")
-    )
-    queries = (
-        tf.groupBy("w")
-        .agg(F.count("*").alias("df"), F.sum("tf").alias("cf"))
-        .filter(~F.col("w").isin(*_STOPWORDS))
-        .orderBy(F.col("cf").desc(), F.col("w"))
-        .limit(n_queries)
-        .select("w", "df")
-    )
+    _, _, stats, queries = _bm25_postings(_documents(spark, sf_dir), n_queries)
     return queries.crossJoin(F.broadcast(stats))
 
 

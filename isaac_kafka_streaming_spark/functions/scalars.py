@@ -54,3 +54,20 @@ def after(col: Column | str, delim: str) -> Column:
 def null_to_empty(col: Column | str) -> Column:
     """F10 — NullHandler: null -> '' (KafkaLoader.java:132-135)."""
     return F.coalesce((F.col(col) if isinstance(col, str) else col).cast("string"), F.lit(""))
+
+
+def hex_long(hex_col: Column | str, start: int, length: int) -> Column:
+    """Engine-neutral hash slice: hex digits [start, start+length) of a
+    hex string (an md5 digest at every call site) read as a long.
+    Spark conv(hex, 16, 10) and DuckDB CAST('0x' || hex AS BIGINT)
+    agree on every value up to 15 digits (60 bits), so anything keyed
+    on this slice is oracle-replayable."""
+    return F.conv(F.substring(hex_col, start, length), 16, 10).cast("long")
+
+
+def normalized_text_hash(text_col: Column | str) -> Column:
+    """sha256 hex of lower-cased, whitespace-collapsed, trimmed text —
+    the normalized-dedup key.  The DuckDB twin is
+    sha256(TRIM(regexp_replace(lower(text), '\\s+', ' ', 'g')))."""
+    text = F.col(text_col) if isinstance(text_col, str) else text_col
+    return F.sha2(F.trim(F.regexp_replace(F.lower(text), r"\s+", " ")), 256)

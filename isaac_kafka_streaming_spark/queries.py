@@ -20,6 +20,7 @@ from typing import Callable, Optional
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .functions.scalars import hex_long
 from .operators import aggregations as agg
 from .operators.joins import asof_join, enrich, interval_join
 from .operators.sessionize import sessionize
@@ -364,8 +365,8 @@ def hll_register_updates(
     length(bin(v)) — no libm anywhere.  Pure map-side projection;
     the groupBy max over it is the mergeable sketch state."""
     h = F.md5(F.concat(F.lit("hll:"), F.col(id_col).cast("string")))
-    register = F.conv(F.substring(h, 1, 6), 16, 10).cast("long") % 64
-    v = F.conv(F.substring(h, 7, 15), 16, 10).cast("long")
+    register = hex_long(h, 1, 6) % 64
+    v = hex_long(h, 7, 15)
     rho = F.when(v == 0, F.lit(61)).otherwise(
         F.lit(61) - F.length(F.bin(v))
     )

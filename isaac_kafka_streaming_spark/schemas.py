@@ -5,7 +5,9 @@ The reference is schema-less (Jackson JsonNode, missing fields read as
 zero-defaults — SURVEY.md §1.2); the idiomatic Spark replacement is
 schema-on-read with these declared contracts plus explicit coalesce
 defaults where the zero-default semantics matter
-(functions.scalars.json_*).
+(functions.scalars.json_*).  A2 question attempts derive from the
+events table (plans.views.question_attempts_from); the A3 user-profile
+allow-list is sources.jdbc.USER_PROFILE_COLUMNS.
 """
 
 from __future__ import annotations
@@ -22,37 +24,6 @@ LOGGED_EVENT_SCHEMA = T.StructType(
         T.StructField("event_details", T.StringType()),  # polymorphic: raw JSON
         T.StructField("ip_address", T.StringType()),
         T.StructField("timestamp", T.LongType()),  # epoch millis
-    ]
-)
-
-# A2 — event_details for question-attempt events
-# (DerivedStreams.java:133-135,142-144,167-169,180-181)
-QUESTION_ATTEMPT_DETAILS_SCHEMA = T.StructType(
-    [
-        T.StructField("questionId", T.StringType()),  # "<page>|<part>"
-        T.StructField("correct", T.BooleanType()),
-        T.StructField("dateAttempted", T.LongType()),  # epoch millis
-    ]
-)
-
-# A3 — event_details for CREATE_UPDATE_USER events
-# (KafkaUserLoader.java:119-150; all stringly-typed via NullHandler)
-USER_PROFILE_SCHEMA = T.StructType(
-    [
-        T.StructField(name, T.StringType())
-        for name in (
-            "given_name",
-            "family_name",
-            "user_id",
-            "role",
-            "date_of_birth",
-            "gender",
-            "registration_date",
-            "school_id",
-            "school_other",
-            "default_level",
-            "email_verification_status",
-        )
     ]
 )
 

@@ -80,6 +80,9 @@ def streak_state_stream(
     discussed in SURVEY.md §7.6.  streak_units reproduces the literal
     floor(floor(span_ms/1000)/7).  Input columns: (user_id, ts).
     Event time reaches the machine as epoch micros (module docstring).
+    Rows with a NULL ts are dropped before the machine and never
+    counted: the batch form ranks a NULL first, but a stream cannot
+    place one in event-time order.
     """
     gap_ms = gap_seconds * 1000
 
@@ -119,7 +122,8 @@ def streak_state_stream(
             )
 
     return (
-        events.select("user_id", F.unix_micros("ts").alias("ts_us"))
+        events.filter(F.col("ts").isNotNull())
+        .select("user_id", F.unix_micros("ts").alias("ts_us"))
         .groupBy("user_id")
         .applyInPandasWithState(
             process,
@@ -149,7 +153,9 @@ def threshold_crossing_stream(
     `qualifying` is the stream of events that increment the measure
     (e.g. correct question attempts) with columns
     (user_id, date_attempted).  Event time reaches the machine as epoch
-    micros (module docstring).
+    micros (module docstring).  Rows with a NULL date_attempted are
+    dropped before the machine and never counted: the batch form ranks
+    a NULL first, but a stream cannot place one in event-time order.
     """
     thresholds_set = frozenset(int(t) for t in thresholds)
 
@@ -182,9 +188,8 @@ def threshold_crossing_stream(
             )
 
     return (
-        qualifying.select(
-            "user_id", F.unix_micros("date_attempted").alias("at_us")
-        )
+        qualifying.filter(F.col("date_attempted").isNotNull())
+        .select("user_id", F.unix_micros("date_attempted").alias("at_us"))
         .groupBy("user_id")
         .applyInPandasWithState(
             process,
@@ -384,9 +389,9 @@ def priority_sample_stream(docs: DataFrame, k: int = 20) -> DataFrame:
     priority sampling at ingest.
 
     EXACT batch parity, not approximate: the priority q = w * 2^24 /
-    u_int uses the same identity-hash u as the batch form (computed
-    JVM-side in the pre-state projection with the identical md5/conv
-    expressions), so the reservoir's fixed point over any arrival
+    u_int uses the batch form's own identity-hash u
+    (sampling.priority_u_int, computed JVM-side in the pre-state
+    projection), so the reservoir's fixed point over any arrival
     order equals priority_sample's output bit-for-bit — merging a
     top-(k+1) set is order-independent.  `version` (rows seen so far
     per stratum) is monotone; readers take each stratum's max-version
@@ -396,20 +401,9 @@ def priority_sample_stream(docs: DataFrame, k: int = 20) -> DataFrame:
 
     Input: any DataFrame/stream with (doc_id, lang, n_chars).
     """
-    u_int = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(F.lit("ws:"), F.col("doc_id").cast("string"))
-                ),
-                1,
-                6,
-            ),
-            16,
-            10,
-        ).cast("long")
-        + 1
-    )
+    from ..extensions.sampling import priority_u_int
+
+    u_int = priority_u_int("ws")  # priority_sample's default salt
     keyed = docs.select(
         "doc_id",
         "lang",

@@ -6,8 +6,13 @@ faithful Spark mapping is update-mode stateful aggregation with NO
 watermark (unbounded state — declared deviation: production sets
 `watermark=` to bound it).  Every transformation here is the same
 DataFrame expression the batch operators use — Structured Streaming
-incrementalizes it; batch/stream parity is asserted in
-tests/test_streaming.py.
+incrementalizes it.  The rule that keeps this true: a streaming twin
+calls its batch module's expression builders (the hash helpers in
+functions.scalars, text.bm25_score, text.winnow_fp_hashes,
+packing.length_bucket_counts/length_bucket_waste,
+sampling.priority_u_int, ...) and never re-types them.  The twin
+parity tests in tests/test_streaming.py therefore pin only the
+stateful part: state, output mode and emission.
 
 Emission-cadence difference (T6): the reference emits one update per
 input record; micro-batching coalesces per-key updates within a batch.
@@ -22,6 +27,7 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.scalars import normalized_text_hash
 from ..schemas import EVENTS_TABLE_SCHEMA
 
 
@@ -236,10 +242,9 @@ def streaming_dedup_normalized(
     the watermark passes it: the 100 TB/day form, trading "dups
     farther apart than the watermark re-emerge" for bounded state.
     """
-    norm = F.sha2(
-        F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")), 256
+    hashed = docs_stream.withColumn(
+        "text_hash", normalized_text_hash(text_col)
     )
-    hashed = docs_stream.withColumn("text_hash", norm)
     if ts_col is not None and watermark is not None:
         return hashed.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
             ["text_hash"]
@@ -264,10 +269,9 @@ def streaming_dedup_incoming(
     dedup; compose with streaming_dedup_normalized to also dedup the
     stream against itself).
     """
-    norm = F.sha2(
-        F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")), 256
+    hashed = docs_stream.withColumn(
+        "text_hash", normalized_text_hash(text_col)
     )
-    hashed = docs_stream.withColumn("text_hash", norm)
     return hashed.join(corpus_index, "text_hash", "left").withColumn(
         "is_new", F.col("dup_of").isNull()
     )
@@ -429,10 +433,7 @@ def streaming_bloom_probe(
     """
     from ..extensions.dedup import bloom_pos_expr
 
-    norm = F.sha2(
-        F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " ")), 256
-    )
-    out = docs_stream.withColumn("text_hash", norm)
+    out = docs_stream.withColumn("text_hash", normalized_text_hash(text_col))
     hit = F.lit(True)
     for i in range(k):
         bits_i = F.broadcast(
@@ -993,13 +994,14 @@ def streaming_bm25_score(
     aggregation state), dl is the doc's own length, and the static
     side rides a broadcast — so it runs append-mode with zero state
     store.  Per arriving document the work is O(|terms| x dl).  Emits
-    (query_term, doc_id, tf, bm25) with EXACTLY the batch scores:
+    (query_term, doc_id, tf, bm25) with the batch's own score
+    expression (text.bm25_score), so EXACTLY the batch scores:
     parity with bm25_top_docs' surviving rows is pinned in
     tests/test_streaming.py (the global top-k rank itself stays a
     batch/read-time concern — a streaming global top-k would need a
     complete-mode sort over all history).
     """
-    from ..extensions.text import _tokens
+    from ..extensions.text import _tokens, bm25_score
 
     base = docs_stream.select(
         "doc_id", _tokens(F.col("text")).alias("tokens")
@@ -1010,26 +1012,11 @@ def streaming_bm25_score(
             F.filter(F.col("tokens"), lambda t: t == F.col("w"))
         ).cast("long"),
     ).filter(F.col("tf") > 0)
-    idf = F.log(
-        (F.col("n_docs") - F.col("df") + F.lit(0.5))
-        / (F.col("df") + F.lit(0.5))
-        + F.lit(1.0)
-    )
-    score = F.round(
-        idf
-        * (F.col("tf") * F.lit(k1 + 1.0))
-        / (
-            F.col("tf")
-            + F.lit(k1)
-            * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.col("avgdl"))
-        ),
-        6,
-    )
     return scored.select(
         F.col("w").alias("query_term"),
         "doc_id",
         "tf",
-        score.alias("bm25"),
+        bm25_score(k1, b).alias("bm25"),
     )
 
 
@@ -1326,47 +1313,23 @@ def corpus_report_from_stores(
 
 
 def streaming_length_buckets(docs_stream: DataFrame) -> DataFrame:
-    """Streaming form of packing.length_bucket_plan's bucket rollup:
-    the power-of-two ladder is a map-side projection (shared constants
-    with the batch card), the per-bucket doc/token counts one
-    update-mode aggregate — state is |buckets|+1 rows total.  The
-    waste columns derive at read time from the store
-    (length_bucket_readoff), the usual two-level split."""
-    from ..extensions.text import _tokens
-    from ..extensions.packing import LENGTH_BUCKETS
+    """Streaming form of packing.length_bucket_plan's bucket rollup
+    (packing.length_bucket_counts as one update-mode aggregate — state
+    is |buckets|+1 rows total).  The waste columns derive at read time
+    from the store (length_bucket_readoff), the usual two-level
+    split."""
+    from ..extensions.packing import length_bucket_counts
 
-    n = F.size(_tokens(F.col("text"))).cast("long")
-    bucket = F.lit(-1).cast("long")
-    for b in sorted(LENGTH_BUCKETS, reverse=True):
-        bucket = F.when(n <= b, F.lit(b).cast("long")).otherwise(bucket)
-    return (
-        docs_stream.select(
-            n.alias("n_tokens"), bucket.alias("bucket_len")
-        )
-        .groupBy("bucket_len")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_tokens").alias("total_tokens"),
-        )
-    )
+    return length_bucket_counts(docs_stream)
 
 
 def length_bucket_readoff(store: DataFrame) -> DataFrame:
     """Read-time waste columns over the streaming bucket store —
-    identical expressions to the batch card, so store + read-off ==
+    packing.length_bucket_waste, so store + read-off ==
     length_bucket_plan exactly."""
-    padded = F.when(
-        F.col("bucket_len") > 0, F.col("n_docs") * F.col("bucket_len")
-    ).otherwise(F.col("total_tokens"))
-    return store.select(
-        "bucket_len",
-        "n_docs",
-        "total_tokens",
-        padded.cast("long").alias("padded_tokens"),
-        F.round(
-            1.0 - F.col("total_tokens") / padded.cast("double"), 6
-        ).alias("waste_pct"),
-    )
+    from ..extensions.packing import length_bucket_waste
+
+    return length_bucket_waste(store)
 
 
 def index_ingest_batch_writer(

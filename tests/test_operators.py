@@ -6,6 +6,8 @@ boundary equality, deterministic tie-breaks.
 from __future__ import annotations
 
 import datetime as dt
+import hashlib
+import re
 
 from pyspark.sql import Row
 from pyspark.sql import functions as F
@@ -13,9 +15,11 @@ from pyspark.sql import functions as F
 from isaac_kafka_streaming_spark.functions.scalars import (
     after,
     before,
+    hex_long,
     json_bool,
     json_long,
     json_str,
+    normalized_text_hash,
 )
 from isaac_kafka_streaming_spark.operators.aggregations import (
     hot_keys,
@@ -60,6 +64,36 @@ def test_before_after_first_delimiter(spark):
     assert (out[0].b, out[0].a) == ("page", "part|sub")
     assert (out[1].b, out[1].a) == ("page", "part")
     assert (out[2].b, out[2].a) == ("nodelim", "nodelim")
+
+
+def test_hash_helpers_match_hashlib_replica(spark):
+    """hex_long and normalized_text_hash against a hashlib replica.
+    ASCII inputs only: Java and Python disagree on what \\s and
+    lower() cover outside ASCII, so this replica says nothing there."""
+    texts = [
+        "Hello   World",
+        "  leading and trailing  ",
+        "tabs\tand\nnew\r\nlines\x0b\x0cmixed",
+        "MiXeD CaSe 123",
+        "",
+        "   ",
+        "one",
+    ]
+    slices = [(1, 4), (1, 6), (1, 7), (1, 15), (7, 15), (16, 14), (31, 2)]
+    df = spark.createDataFrame([(t,) for t in texts], "text string")
+    md5 = F.md5(F.col("text"))
+    rows = df.select(
+        "text",
+        normalized_text_hash("text").alias("norm"),
+        *[hex_long(md5, s, n).alias(f"h{s}_{n}") for s, n in slices],
+    ).collect()
+    assert len(rows) == len(texts)
+    for r in rows:
+        norm = re.sub(r"\s+", " ", r.text.lower()).strip(" ")
+        assert r.norm == hashlib.sha256(norm.encode()).hexdigest(), r.text
+        hexd = hashlib.md5(r.text.encode()).hexdigest()
+        for s, n in slices:
+            assert r[f"h{s}_{n}"] == int(hexd[s - 1 : s - 1 + n], 16), (s, n)
 
 
 def test_latest_per_key_tiebreak(spark):

@@ -113,3 +113,26 @@ def test_registered_names_cover_coverage_doc():
         "temperature_mixture_plan"
     }
     assert doc_names == expected_doc, sorted(doc_names ^ expected_doc)
+
+
+# Spellings of the two engine-neutral hash rules, matched after all
+# whitespace is removed (so a chain split across lines still counts).
+_ONE_SPELLING = {
+    "md5 hex-slice -> long": "F.conv(F.substring(",
+    "normalized-text sha256": "F.trim(F.regexp_replace(F.lower(",
+}
+
+
+def test_hash_rules_spelled_once():
+    """The md5 hex-slice and normalized-text hash rules are written only
+    in functions/scalars.py (hex_long, normalized_text_hash); every
+    other package module calls those helpers, so the copies the DuckDB
+    oracles replay cannot drift apart."""
+    pkg = REPO_ROOT / "isaac_kafka_streaming_spark"
+    found = {rule: [] for rule in _ONE_SPELLING}
+    for path in sorted(pkg.rglob("*.py")):
+        src = re.sub(r"\s+", "", path.read_text())
+        for rule, spelling in _ONE_SPELLING.items():
+            if spelling in src:
+                found[rule].append(path.relative_to(pkg).as_posix())
+    assert found == {rule: ["functions/scalars.py"] for rule in _ONE_SPELLING}

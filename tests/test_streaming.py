@@ -2750,3 +2750,51 @@ def test_threshold_crossing_keeps_microseconds_and_schema(spark, tmp_path):
         (7, aid, 1, t0 + dt.timedelta(microseconds=1)),
         (7, aid, 3, t0 + dt.timedelta(microseconds=3)),
     ]
+
+
+def test_state_machines_drop_null_event_times(spark, tmp_path):
+    """A NULL event time cannot be placed in event-time order, so both
+    machines drop it before the state operator: it never counts toward
+    a streak or a threshold, and no crossing carries a NULL
+    achieved_at.  Output schemas stay the declared ones."""
+    import datetime as dt
+
+    from isaac_kafka_streaming_spark.streaming.state import (
+        OUTPUT_SCHEMA,
+        STREAK_OUTPUT_SCHEMA,
+        streak_state_stream,
+    )
+
+    t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
+    t1 = t0 + dt.timedelta(seconds=1)
+    rows = [(7, t0), (7, None), (7, t1)]
+
+    streak = streak_state_stream(
+        _one_file_stream(
+            spark, tmp_path / "streak", "user_id long, ts timestamp", rows
+        )
+    )
+    assert streak.schema == STREAK_OUTPUT_SCHEMA
+    got = [
+        (r.user_id, r.streak_start, r.streak_end, r.n_events)
+        for r in st.run_to_memory(streak, "streak_null_ts").collect()
+    ]
+    assert got == [(7, t0, t1, 2)]
+
+    crossings = threshold_crossing_stream(
+        _one_file_stream(
+            spark,
+            tmp_path / "crossing",
+            "user_id long, date_attempted timestamp",
+            rows,
+        ),
+        thresholds=(1, 2, 3),
+    )
+    assert crossings.schema == OUTPUT_SCHEMA
+    got = sorted(
+        (r.threshold, r.achieved_at)
+        for r in st.run_to_memory(
+            crossings, "crossing_null_ts", output_mode="append"
+        ).collect()
+    )
+    assert got == [(1, t0), (2, t1)]
